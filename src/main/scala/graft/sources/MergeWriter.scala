@@ -1254,14 +1254,6 @@ object MergeWriter {
       case Some(b) => manifestFiles(fs, dir, branchManPrefix(b))
     }
 
-  /** Commit for maintenance operations (compact, splitBuckets,
-    * truncateHistory) whose staged state was derived from ONE observed
-    * version: losing the version CAS to a concurrent merge means the
-    * derivation is stale, so surface the protocol's documented
-    * `ConcurrentModificationException` ("re-run against the new table
-    * state") instead of [[publishAtomically]]'s raw IOException — safe
-    * either way, but callers catch the protocol exception.
-    */
   /** Bucket id of a row's key tuple — PLUS the write-side enforcement
     * of the keyed invariant that no key column is NULL (the catalog
     * surfaces keys as NOT NULL; a stored NULL key would let Catalyst's
@@ -1303,6 +1295,14 @@ object MergeWriter {
         "deduplicate the source and re-run")
   }
 
+  /** Commit for maintenance operations (compact, splitBuckets,
+    * truncateHistory) whose staged state was derived from ONE observed
+    * version: losing the version CAS to a concurrent merge means the
+    * derivation is stale, so surface the protocol's documented
+    * `ConcurrentModificationException` ("re-run against the new table
+    * state") instead of [[publishAtomically]]'s raw IOException — safe
+    * either way, but callers catch the protocol exception.
+    */
   private def commitOrConflict(fs: FileSystem, dir: Path, m: Manifest,
                                op: String): Unit =
     try commitManifest(fs, dir,
@@ -1313,6 +1313,39 @@ object MergeWriter {
           s"$op: lost the version-${m.version} commit race to a concurrent " +
             s"writer of $dir — re-run against the new table state", e)
     }
+
+  /** The metadata-commit rule (PROTOCOL.md "Optimistic concurrency"):
+    * each attempt re-reads the head and hands it to `next` (`None` = no
+    * committed table), so the operation's validation re-runs against
+    * whatever a concurrent writer committed. `next` returning `None`
+    * means nothing to do; `Some(m)` commits `m` as the head's successor
+    * with `op`/`opTs` stamped. Only a lost CAS retries — at most 6
+    * attempts, then `ConcurrentModificationException` naming `op`. gc
+    * runs once, after the winning commit and outside the retry, so a gc
+    * failure never re-runs a commit that already landed.
+    */
+  private def commitMetadata(fs: FileSystem, dir: Path, op: String)(
+      next: Option[Manifest] => Option[Manifest]): Unit = {
+    var attempt = 0
+    while (attempt < 6) {
+      attempt += 1
+      val head = currentManifest(fs, dir)
+      (head, next(head)) match {
+        case (Some(cur), Some(m)) =>
+          val won =
+            try {
+              commitManifest(fs, dir, m.copy(version = cur.version + 1,
+                op = op, opTs = System.currentTimeMillis()))
+              true
+            } catch { case _: java.io.IOException => false } // lost CAS
+          if (won) { gc(fs, dir); return }
+        case _ => return
+      }
+    }
+    throw new java.util.ConcurrentModificationException(
+      s"$op: lost the commit race to concurrent writers of $dir on " +
+        "every retry — re-run against the new table state")
+  }
 
   /** Metadata-only commit recording a streaming txn guard on an empty
     * batch. Unlike a data commit — whose staged epoch becomes stale on a
@@ -1612,32 +1645,13 @@ object MergeWriter {
     * re-apply, so expire only apps that can no longer deliver.
     */
   def expireTxns(spark: SparkSession, tablePath: String,
-                 apps: Seq[String]): Unit = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    // metadata-only transform: a lost CAS just means a concurrent merge
-    // won the version — re-read and re-apply the expiry on the new state
-    // (the same rebase idea as writeEpochAndCommit, trivially safe here
-    // because nothing was staged), bounded like the merge retry loop
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => return
-        case Some(man) =>
-          val remaining = man.txns -- apps
-          if (remaining.size == man.txns.size) return
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1, txns = remaining))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
+                 apps: Seq[String]): Unit =
+    commitMetadata(fsFor(spark, tablePath), new Path(tablePath),
+      "expireTxns") {
+      case Some(man) if apps.exists(man.txns.contains) =>
+        Some(man.copy(txns = man.txns -- apps))
+      case _ => None
     }
-    throw new java.util.ConcurrentModificationException(
-      s"expireTxns: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
-  }
 
   /** Collapse readable history to the CURRENT state — the
     * right-to-be-forgotten completion of [[delete]]: a keyed delete
@@ -1700,60 +1714,29 @@ object MergeWriter {
     // never silently re-target the concurrent writer's newer state — a
     // WAP pipeline that validated version N and tags "certified" must
     // pin N or fail, not pin unaudited N+1
-    val v = version.getOrElse(currentManifest(fs, dir)
-      .map(_.version)
-      .getOrElse(throw new IllegalArgumentException(
-        s"createTag: $tablePath holds no committed graft table")))
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"createTag: $tablePath holds no committed graft table")
-        case Some(man) =>
-          val retained = manifestFiles(fs, dir).map(_._1)
-          require(retained.contains(v),
-            s"createTag: version $v not retained for $tablePath " +
-              s"(readable: ${retained.mkString(", ")})")
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1,
-                tags = man.tags + (tag -> v),
-                op = "tag", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
+    def missing = new IllegalArgumentException(
+      s"createTag: $tablePath holds no committed graft table")
+    val v = version.getOrElse(
+      currentManifest(fs, dir).map(_.version).getOrElse(throw missing))
+    commitMetadata(fs, dir, "tag") { head =>
+      val man = head.getOrElse(throw missing)
+      val retained = manifestFiles(fs, dir).map(_._1)
+      require(retained.contains(v),
+        s"createTag: version $v not retained for $tablePath " +
+          s"(readable: ${retained.mkString(", ")})")
+      Some(man.copy(tags = man.tags + (tag -> v)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"createTag: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
   }
 
   /** Drop a version tag; the version it pinned becomes reclaimable by
     * the ordinary retention rules at the next gc.
     */
-  def dropTag(spark: SparkSession, tablePath: String, tag: String): Unit = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => return
-        case Some(man) =>
-          if (!man.tags.contains(tag)) return
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1, tags = man.tags - tag,
-                op = "untag", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
+  def dropTag(spark: SparkSession, tablePath: String, tag: String): Unit =
+    commitMetadata(fsFor(spark, tablePath), new Path(tablePath), "untag") {
+      case Some(man) if man.tags.contains(tag) =>
+        Some(man.copy(tags = man.tags - tag))
+      case _ => None
     }
-    throw new java.util.ConcurrentModificationException(
-      s"dropTag: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
-  }
 
   // ---- CHECK CONSTRAINTS (ANSI table constraints) ---------------------
   //
@@ -1912,64 +1895,35 @@ object MergeWriter {
         s"addCheckConstraint: existing rows of $tablePath violate " +
           s"CHECK ($predicate) — e.g. ${violating(0)}; constraint " +
           "not added")
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"addCheckConstraint: $tablePath lost its manifest")
-        case Some(man) =>
-          // a concurrent data commit since the validation scan may have
-          // added rows the scan never saw — those went through an
-          // enforcement pass WITHOUT this constraint, so the proof no
-          // longer covers the table: re-validate instead of committing
-          if (man.version != man0.version &&
-              (man.epochs != man0.epochs || man.overlays != man0.overlays ||
-                dvFileRefs(man) != dvFileRefs(man0)))
-            throw new java.util.ConcurrentModificationException(
-              s"addCheckConstraint: $tablePath moved from version " +
-                s"${man0.version} to ${man.version} during validation — " +
-                "re-run against the new table state")
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1,
-                checks = man.checks + (name -> predicate),
-                op = "addconstraint", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
+    commitMetadata(fs, dir, "addconstraint") { head =>
+      val man = head.getOrElse(throw new IllegalArgumentException(
+        s"addCheckConstraint: $tablePath lost its manifest"))
+      // a concurrent data commit since the validation scan may have
+      // added rows the scan never saw — those went through an
+      // enforcement pass WITHOUT this constraint, so the proof no
+      // longer covers the table: re-validate instead of committing
+      if (man.version != man0.version &&
+          (man.epochs != man0.epochs || man.overlays != man0.overlays ||
+            dvFileRefs(man) != dvFileRefs(man0)))
+        throw new java.util.ConcurrentModificationException(
+          s"addCheckConstraint: $tablePath moved from version " +
+            s"${man0.version} to ${man.version} during validation — " +
+            "re-run against the new table state")
+      Some(man.copy(checks = man.checks + (name -> predicate)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"addCheckConstraint: lost the commit race to concurrent writers " +
-        s"of $tablePath on every retry — re-run against the new table state")
   }
 
   /** Drop a named CHECK constraint (metadata-only commit; absent name
     * is a no-op so SQL `DROP CONSTRAINT IF EXISTS` maps directly).
     */
   def dropCheckConstraint(spark: SparkSession, tablePath: String,
-                          name: String): Unit = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => return
-        case Some(man) =>
-          if (!man.checks.contains(name)) return
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1, checks = man.checks - name,
-                op = "dropconstraint", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
+                          name: String): Unit =
+    commitMetadata(fsFor(spark, tablePath), new Path(tablePath),
+      "dropconstraint") {
+      case Some(man) if man.checks.contains(name) =>
+        Some(man.copy(checks = man.checks - name))
+      case _ => None
     }
-    throw new java.util.ConcurrentModificationException(
-      s"dropCheckConstraint: lost the commit race to concurrent writers " +
-        s"of $tablePath on every retry — re-run against the new table state")
-  }
 
   // ---- IDENTITY COLUMNS (GENERATED BY DEFAULT AS IDENTITY) ------------
   //
@@ -2413,14 +2367,6 @@ object MergeWriter {
           s"$tablePath (tags: ${man.tags.keys.toSeq.sorted.mkString(", ")})"))
     }
 
-  /** Set the table's retention policy (see [[Manifest.retainVersions]]):
-    * a metadata-only commit every later commit carries forward.
-    * `versions` below [[KeepManifests]] clamps up (a pinned reader must
-    * survive one concurrent commit); `ms` = 0 means count-only. Takes
-    * effect immediately — RAISING retention stops gc from dropping
-    * history from now on (already-collected versions are gone);
-    * lowering it lets the next commit's gc reclaim.
-    */
   /** The table's current retention policy `(versions, ms)` — the
     * catalog's ALTER TABLE reads it to apply partial updates.
     */
@@ -2430,30 +2376,24 @@ object MergeWriter {
       .map(m => (m.retainVersions, m.retainMs))
       .getOrElse((KeepManifests, 0L))
 
+  /** Set the table's retention policy (see [[Manifest.retainVersions]]):
+    * a metadata-only commit every later commit carries forward.
+    * `versions` below [[KeepManifests]] clamps up (a pinned reader must
+    * survive one concurrent commit); `ms` = 0 means count-only. Takes
+    * effect immediately — RAISING retention stops gc from dropping
+    * history from now on (already-collected versions are gone);
+    * lowering it lets the next commit's gc reclaim.
+    */
   def setRetention(spark: SparkSession, tablePath: String,
                    versions: Int = KeepManifests, ms: Long = 0L): Unit = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"setRetention: no committed graft table at $tablePath")
-        case Some(man) =>
-          val v = math.max(KeepManifests, versions)
-          if (man.retainVersions == v && man.retainMs == ms) return
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              retainVersions = v, retainMs = math.max(0L, ms),
-              op = "retention", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
+    val v = math.max(KeepManifests, versions)
+    commitMetadata(fsFor(spark, tablePath), new Path(tablePath),
+      "retention") { head =>
+      val man = head.getOrElse(throw new IllegalArgumentException(
+        s"setRetention: no committed graft table at $tablePath"))
+      if (man.retainVersions == v && man.retainMs == ms) None
+      else Some(man.copy(retainVersions = v, retainMs = math.max(0L, ms)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"setRetention: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
   }
 
   /** RESTORE to a retained version (Delta `RESTORE TABLE ... TO VERSION
@@ -2478,38 +2418,27 @@ object MergeWriter {
                      version: Long): Unit = {
     val fs = fsFor(spark, tablePath)
     val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"restore: no committed graft table at $tablePath")
-        case Some(man) =>
-          if (man.version == version) return // already that state
-          val retained = manifestFiles(fs, dir)
-          val target = retained.find(_._1 == version)
-            .map(h => readManifest(fs, version, h._2))
-            .getOrElse(throw new IllegalArgumentException(
-              s"restore: version $version not retained for $tablePath " +
-                s"(readable: ${retained.map(_._1).mkString(", ")})"))
-          try {
-            commitManifest(fs, dir, target.copy(
-              version = man.version + 1,
-              txns = man.txns,
-              retainVersions = man.retainVersions, retainMs = man.retainMs,
-              nextColId = math.max(man.nextColId, target.nextColId),
-              // tags name VERSIONS (policy, not data) — they survive the
-              // rollback; the writer policy flag stays current too
-              tags = man.tags,
-              deleteVectors = man.deleteVectors,
-              op = "restore", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+    commitMetadata(fs, dir, "restore") { head =>
+      val man = head.getOrElse(throw new IllegalArgumentException(
+        s"restore: no committed graft table at $tablePath"))
+      if (man.version == version) None // already that state
+      else {
+        val retained = manifestFiles(fs, dir)
+        val target = retained.find(_._1 == version)
+          .map(h => readManifest(fs, version, h._2))
+          .getOrElse(throw new IllegalArgumentException(
+            s"restore: version $version not retained for $tablePath " +
+              s"(readable: ${retained.map(_._1).mkString(", ")})"))
+        Some(target.copy(
+          txns = man.txns,
+          retainVersions = man.retainVersions, retainMs = man.retainMs,
+          nextColId = math.max(man.nextColId, target.nextColId),
+          // tags name VERSIONS (policy, not data) — they survive the
+          // rollback; the writer policy flag stays current too
+          tags = man.tags,
+          deleteVectors = man.deleteVectors))
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"restore: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
   }
 
   /** ALTER TABLE ADD COLUMNS as a METADATA-ONLY commit: append nullable
@@ -2523,49 +2452,36 @@ object MergeWriter {
   def addColumns(spark: SparkSession, tablePath: String,
                  cols: StructType): Unit = {
     require(cols.nonEmpty, "addColumns: no columns given")
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"addColumns: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"addColumns: $tablePath records no schema (pre-schema " +
-                "manifest) — run one merge first"))
-          cols.fields.foreach { f =>
-            require(!cur.fieldNames.contains(f.name),
-              s"addColumns: column '${f.name}' already exists")
-            require(f.nullable,
-              s"addColumns: '${f.name}' must be nullable — existing " +
-                "rows null-fill (declare NOT NULL data via a rewrite)")
-          }
-          val next = StructType(cur.fields ++ stripSchemaIds(
-            StructType(cols.fields)).fields)
-          // an id-stamped table assigns each added column a FRESH field
-          // id (never a reused one — see [[Manifest.nextColId]])
-          val (cids, ncid) =
-            if (man.nextColId > 0L) {
-              var n = man.nextColId
-              (man.colIds ++ cols.fields.map { f =>
-                f.name -> { val v = n; n += 1; v }
-              }, n)
-            } else (man.colIds, man.nextColId)
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(next.json), colIds = cids, nextColId = ncid,
-              op = "addColumns", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+    commitMetadata(fsFor(spark, tablePath), new Path(tablePath),
+      "addColumns") { head =>
+      val man = head.getOrElse(throw new IllegalArgumentException(
+        s"addColumns: no committed graft table at $tablePath"))
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"addColumns: $tablePath records no schema (pre-schema " +
+            "manifest) — run one merge first"))
+      cols.fields.foreach { f =>
+        require(!cur.fieldNames.contains(f.name),
+          s"addColumns: column '${f.name}' already exists")
+        require(f.nullable,
+          s"addColumns: '${f.name}' must be nullable — existing " +
+            "rows null-fill (declare NOT NULL data via a rewrite)")
       }
+      val next = StructType(cur.fields ++ stripSchemaIds(
+        StructType(cols.fields)).fields)
+      // an id-stamped table assigns each added column a FRESH field
+      // id (never a reused one — see [[Manifest.nextColId]])
+      val (cids, ncid) =
+        if (man.nextColId > 0L) {
+          var n = man.nextColId
+          (man.colIds ++ cols.fields.map { f =>
+            f.name -> { val v = n; n += 1; v }
+          }, n)
+        } else (man.colIds, man.nextColId)
+      Some(man.copy(schema = Some(next.json), colIds = cids,
+        nextColId = ncid))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"addColumns: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
   }
 
   /** ALTER TABLE RENAME COLUMN as a METADATA-ONLY commit (Iceberg field
@@ -2587,100 +2503,86 @@ object MergeWriter {
     * versions; drop the bloom index first).
     */
   def renameColumn(spark: SparkSession, tablePath: String,
-                   from: String, to: String): Unit = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"renameColumn: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"renameColumn: $tablePath records no schema (pre-schema " +
-                "manifest) — run one merge first"))
-          require(man.nextColId > 0L,
-            s"renameColumn: $tablePath predates field-id stamping — its " +
-              "files carry no column ids to match the renamed column by. " +
-              "Migrate with a full rewrite (REPLACE TABLE / overwrite), " +
-              "which stamps ids, then rename.")
-          require(cur.fieldNames.contains(from),
-            s"renameColumn: no column '$from' in $tablePath " +
-              s"(columns: ${cur.fieldNames.mkString(", ")})")
-          require(!cur.fieldNames.exists(_.equalsIgnoreCase(to)),
-            s"renameColumn: column '$to' already exists")
-          require(!man.bloomCols.contains(from),
-            s"renameColumn: '$from' is a Bloom-indexed column — its " +
-              "per-epoch sidecars are name-keyed; rebuild without the " +
-              "bloom index first")
-          man.checks.foreach { case (cn, sql) =>
-            require(!checkPredicateColumns(spark, sql, cur)
-                .exists(_.equalsIgnoreCase(from)),
-              s"renameColumn: '$from' is referenced by CHECK constraint " +
-                s"'$cn' CHECK ($sql) — drop the constraint, rename, and " +
-                "re-add it over the new name")
-          }
-          generatedReferences(spark, cur).foreach { case (gc, g, r) =>
-            require(!r.equalsIgnoreCase(from),
-              s"renameColumn: '$from' is referenced by generated column " +
-                s"'$gc' GENERATED ALWAYS AS ($g) — the stored expression " +
-                "would no longer resolve; re-create the table to rename it")
-          }
-          // shred declarations follow the rename; their HIDDEN stats
-          // keys remap too — the extraction is a pure function of the
-          // variant column (itself matched by field id), so old files'
-          // recorded min/max stay exact under the new hidden name. Old
-          // epochs' BLOOM sidecars stay keyed under the old hidden name
-          // and degrade to keep-all for those files (sound; the next
-          // rewrite re-keys them).
-          val shredRe: Map[String, String] = man.shredCols
-            .filter(_.column == from)
-            .map(s => shredColName(s) -> shredColName(s.copy(column = to)))
-            .toMap
-          def re(c: String): String =
-            if (c == from) to else shredRe.getOrElse(c, c)
-          def reCluster(entry: String): String = entry.indexOf(':') match {
-            case -1 => re(entry)
-            case i => entry.substring(0, i + 1) +
-              entry.substring(i + 1).split(',').map(c => re(c.trim))
-                .mkString(",")
-          }
-          val next = StructType(cur.fields.map(f =>
-            if (f.name == from) f.copy(name = to) else f))
-          val stats2 = man.stats.map { case (b, fss) =>
-            b -> fss.map(f => f.copy(
-              mins = f.mins.map { case (c, v) => re(c) -> v },
-              maxs = f.maxs.map { case (c, v) => re(c) -> v },
-              nulls = f.nulls.map { case (c, v) => re(c) -> v }))
-          }
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(next.json),
-              keyCols = man.keyCols.map(re),
-              clusterCols = man.clusterCols.map(reCluster),
-              stats = stats2,
-              colIds = man.colIds.map { case (c, id) => re(c) -> id },
-              colStats = man.colStats.map { case (c, s) => re(c) -> s },
-              colSketches = man.colSketches
-                .map { case (c, s) => re(c) -> s },
-              // the identity high-water is name-keyed too: a rename
-              // that orphaned it would silently re-issue stored values
-              idhw = man.idhw.map { case (c, v) => re(c) -> v },
-              colHists = man.colHists.map { case (c, h) => re(c) -> h },
-              shredCols = man.shredCols.map(s =>
-                if (s.column == from) s.copy(column = to) else s),
-              op = "renameColumn", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+                   from: String, to: String): Unit =
+    commitMetadata(fsFor(spark, tablePath), new Path(tablePath),
+      "renameColumn") { head =>
+      val man = head.getOrElse(throw new IllegalArgumentException(
+        s"renameColumn: no committed graft table at $tablePath"))
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"renameColumn: $tablePath records no schema (pre-schema " +
+            "manifest) — run one merge first"))
+      require(man.nextColId > 0L,
+        s"renameColumn: $tablePath predates field-id stamping — its " +
+          "files carry no column ids to match the renamed column by. " +
+          "Migrate with a full rewrite (REPLACE TABLE / overwrite), " +
+          "which stamps ids, then rename.")
+      require(cur.fieldNames.contains(from),
+        s"renameColumn: no column '$from' in $tablePath " +
+          s"(columns: ${cur.fieldNames.mkString(", ")})")
+      require(!cur.fieldNames.exists(_.equalsIgnoreCase(to)),
+        s"renameColumn: column '$to' already exists")
+      require(!man.bloomCols.contains(from),
+        s"renameColumn: '$from' is a Bloom-indexed column — its " +
+          "per-epoch sidecars are name-keyed; rebuild without the " +
+          "bloom index first")
+      man.checks.foreach { case (cn, sql) =>
+        require(!checkPredicateColumns(spark, sql, cur)
+            .exists(_.equalsIgnoreCase(from)),
+          s"renameColumn: '$from' is referenced by CHECK constraint " +
+            s"'$cn' CHECK ($sql) — drop the constraint, rename, and " +
+            "re-add it over the new name")
       }
+      generatedReferences(spark, cur).foreach { case (gc, g, r) =>
+        require(!r.equalsIgnoreCase(from),
+          s"renameColumn: '$from' is referenced by generated column " +
+            s"'$gc' GENERATED ALWAYS AS ($g) — the stored expression " +
+            "would no longer resolve; re-create the table to rename it")
+      }
+      // shred declarations follow the rename; their HIDDEN stats
+      // keys remap too — the extraction is a pure function of the
+      // variant column (itself matched by field id), so old files'
+      // recorded min/max stay exact under the new hidden name. Old
+      // epochs' BLOOM sidecars stay keyed under the old hidden name
+      // and degrade to keep-all for those files (sound; the next
+      // rewrite re-keys them).
+      val shredRe: Map[String, String] = man.shredCols
+        .filter(_.column == from)
+        .map(s => shredColName(s) -> shredColName(s.copy(column = to)))
+        .toMap
+      def re(c: String): String =
+        if (c == from) to else shredRe.getOrElse(c, c)
+      def reCluster(entry: String): String = entry.indexOf(':') match {
+        case -1 => re(entry)
+        case i => entry.substring(0, i + 1) +
+          entry.substring(i + 1).split(',').map(c => re(c.trim))
+            .mkString(",")
+      }
+      val next = StructType(cur.fields.map(f =>
+        if (f.name == from) f.copy(name = to) else f))
+      val stats2 = man.stats.map { case (b, fss) =>
+        b -> fss.map(f => f.copy(
+          mins = f.mins.map { case (c, v) => re(c) -> v },
+          maxs = f.maxs.map { case (c, v) => re(c) -> v },
+          nulls = f.nulls.map { case (c, v) => re(c) -> v }))
+      }
+      Some(man.copy(
+        schema = Some(next.json),
+        keyCols = man.keyCols.map(re),
+        clusterCols = man.clusterCols.map(reCluster),
+        stats = stats2,
+        colIds = man.colIds.map { case (c, id) => re(c) -> id },
+        colStats = man.colStats.map { case (c, s) => re(c) -> s },
+        colSketches = man.colSketches
+          .map { case (c, s) => re(c) -> s },
+        // the identity high-water is name-keyed too: a rename
+        // that orphaned it would silently re-issue stored values
+        idhw = man.idhw.map { case (c, v) => re(c) -> v },
+        colHists = man.colHists.map { case (c, h) => re(c) -> h },
+        shredCols = man.shredCols.map(s =>
+          if (s.column == from) s.copy(column = to) else s)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"renameColumn: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
-  }
 
   /** Safe type promotions for [[widenColumn]]: every stored value of
     * `from` is exactly representable in `to`, the parquet readers
@@ -2717,52 +2619,67 @@ object MergeWriter {
   def widenColumn(spark: SparkSession, tablePath: String,
                   name: String, to: DataType): Unit = {
     import org.apache.spark.sql.types._
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"widenColumn: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"widenColumn: $tablePath records no schema (pre-schema " +
-                "manifest) — run one merge first"))
-          val f = cur.fields.find(_.name == name).getOrElse(
-            throw new IllegalArgumentException(
-              s"widenColumn: no column '$name' in $tablePath " +
-                s"(columns: ${cur.fieldNames.mkString(", ")})"))
-          if (f.dataType == to) return // idempotent
-          require(canWiden(f.dataType, to),
-            s"widenColumn: ${f.dataType.simpleString} -> " +
-              s"${to.simpleString} is not a safe widening (allowed: " +
-              "byte/short/int -> wider integral or double, float -> " +
-              "double); anything else needs a rewrite")
-          require(!man.keyCols.contains(name),
-            s"widenColumn: '$name' is a merge key — hash(int x) != " +
-              "hash(long x), so widening would re-bin every row; " +
-              "re-create the table to change a key's type")
-          require(!man.bloomCols.contains(name) || to != DoubleType,
-            s"widenColumn: '$name' is Bloom-indexed — widening to " +
-              "double leaves sidecars no probe can match; rebuild " +
-              "without the bloom index first")
-          val next = StructType(cur.fields.map(x =>
-            if (x.name == name) x.copy(dataType = to) else x))
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(next.json),
-              op = "widenColumn", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+    commitMetadata(fsFor(spark, tablePath), new Path(tablePath),
+      "widenColumn") { head =>
+      val man = head.getOrElse(throw new IllegalArgumentException(
+        s"widenColumn: no committed graft table at $tablePath"))
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"widenColumn: $tablePath records no schema (pre-schema " +
+            "manifest) — run one merge first"))
+      val f = cur.fields.find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(
+          s"widenColumn: no column '$name' in $tablePath " +
+            s"(columns: ${cur.fieldNames.mkString(", ")})"))
+      if (f.dataType == to) None // idempotent
+      else {
+        require(canWiden(f.dataType, to),
+          s"widenColumn: ${f.dataType.simpleString} -> " +
+            s"${to.simpleString} is not a safe widening (allowed: " +
+            "byte/short/int -> wider integral or double, float -> " +
+            "double); anything else needs a rewrite")
+        require(!man.keyCols.contains(name),
+          s"widenColumn: '$name' is a merge key — hash(int x) != " +
+            "hash(long x), so widening would re-bin every row; " +
+            "re-create the table to change a key's type")
+        require(!man.bloomCols.contains(name) || to != DoubleType,
+          s"widenColumn: '$name' is Bloom-indexed — widening to " +
+            "double leaves sidecars no probe can match; rebuild " +
+            "without the bloom index first")
+        val next = StructType(cur.fields.map(x =>
+          if (x.name == name) x.copy(dataType = to) else x))
+        Some(man.copy(schema = Some(next.json)))
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"widenColumn: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
   }
+
+  /** Replace ONLY the per-column metadata of the recorded schema (the
+    * DEFAULT-value keys — `ALTER COLUMN ... SET/DROP DEFAULT`): names
+    * and types must match the recorded schema exactly; a metadata-only
+    * commit carries everything else forward. Field ids are re-stamped
+    * from the manifest (they are write-managed, never caller-supplied).
+    */
+  def replaceSchemaMetadata(spark: SparkSession, tablePath: String,
+                            next: StructType): Unit =
+    commitMetadata(fsFor(spark, tablePath), new Path(tablePath),
+      "alterDefault") { head =>
+      val man = head.getOrElse(throw new IllegalArgumentException(
+        s"replaceSchemaMetadata: no committed graft table at $tablePath"))
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"replaceSchemaMetadata: $tablePath records no schema"))
+      require(cur.fieldNames.toSeq == next.fieldNames.toSeq,
+        s"replaceSchemaMetadata: column set must not change " +
+          s"(${cur.fieldNames.mkString(",")} vs " +
+          s"${next.fieldNames.mkString(",")})")
+      val metaByName = stripSchemaIds(next).fields
+        .map(f => f.name -> f.metadata).toMap
+      val merged = StructType(cur.fields.map(f =>
+        f.copy(metadata = metaByName(f.name))))
+      Some(man.copy(schema = Some(merged.json)))
+    }
 
   /** ALTER TABLE DROP COLUMN as a METADATA-ONLY commit: the column
     * leaves the recorded schema (readers stop requesting it) while the
@@ -2778,128 +2695,71 @@ object MergeWriter {
     * non-key column (a keyed table with no compared column has no
     * diffable content).
     */
-  /** Replace ONLY the per-column metadata of the recorded schema (the
-    * DEFAULT-value keys — `ALTER COLUMN ... SET/DROP DEFAULT`): names
-    * and types must match the recorded schema exactly; a metadata-only
-    * commit carries everything else forward. Field ids are re-stamped
-    * from the manifest (they are write-managed, never caller-supplied).
-    */
-  def replaceSchemaMetadata(spark: SparkSession, tablePath: String,
-                            next: StructType): Unit = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"replaceSchemaMetadata: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"replaceSchemaMetadata: $tablePath records no schema"))
-          require(cur.fieldNames.toSeq == next.fieldNames.toSeq,
-            s"replaceSchemaMetadata: column set must not change " +
-              s"(${cur.fieldNames.mkString(",")} vs " +
-              s"${next.fieldNames.mkString(",")})")
-          val metaByName = stripSchemaIds(next).fields
-            .map(f => f.name -> f.metadata).toMap
-          val merged = StructType(cur.fields.map(f =>
-            f.copy(metadata = metaByName(f.name))))
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(merged.json),
-              op = "alterDefault", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"replaceSchemaMetadata: lost the commit race to concurrent " +
-        s"writers of $tablePath on every retry — re-run against the new " +
-        "table state")
-  }
-
   def dropColumn(spark: SparkSession, tablePath: String,
-                 name: String): Unit = {
-    val fs = fsFor(spark, tablePath)
-    val dir = new Path(tablePath)
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"dropColumn: no committed graft table at $tablePath")
-        case Some(man) =>
-          val cur = man.schema.map(s =>
-            DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalStateException(
-              s"dropColumn: $tablePath records no schema (pre-schema " +
-                "manifest) — run one merge first"))
-          require(man.nextColId > 0L,
-            s"dropColumn: $tablePath predates field-id stamping — " +
-              "migrate with a full rewrite (REPLACE TABLE / overwrite) " +
-              "first")
-          require(cur.fieldNames.contains(name),
-            s"dropColumn: no column '$name' in $tablePath " +
-              s"(columns: ${cur.fieldNames.mkString(", ")})")
-          require(!man.keyCols.contains(name),
-            s"dropColumn: '$name' is a merge key")
-          man.checks.foreach { case (cn, sql) =>
-            require(!checkPredicateColumns(spark, sql, cur)
-                .exists(_.equalsIgnoreCase(name)),
-              s"dropColumn: '$name' is referenced by CHECK constraint " +
-                s"'$cn' CHECK ($sql) — drop the constraint first")
-          }
-          generatedReferences(spark, cur).foreach { case (gc, g, r) =>
-            require(!r.equalsIgnoreCase(name),
-              s"dropColumn: '$name' is referenced by generated column " +
-                s"'$gc' GENERATED ALWAYS AS ($g) — drop '$gc' first")
-          }
-          val inCluster = man.clusterCols.exists { e =>
-            e.indexOf(':') match {
-              case -1 => e == name
-              case i => e.substring(i + 1).split(',').map(_.trim)
-                .contains(name)
-            }
-          }
-          require(!inCluster, s"dropColumn: '$name' is a cluster column")
-          require(!man.bloomCols.contains(name),
-            s"dropColumn: '$name' is a Bloom-indexed column")
-          require(cur.fields.exists(f =>
-            f.name != name && !man.keyCols.contains(f.name)),
-            s"dropColumn: '$name' is the last non-key column")
-          val next = StructType(cur.fields.filterNot(_.name == name))
-          // a dropped variant column takes its shred declarations (and
-          // their hidden stats keys) with it — a later same-named
-          // column must not inherit stale extraction stats
-          val droppedShredKeys = man.shredCols.filter(_.column == name)
-            .map(shredColName).toSet
-          val stats2 = man.stats.map { case (b, fss) =>
-            b -> fss.map(f => f.copy(
-              mins = f.mins - name -- droppedShredKeys,
-              maxs = f.maxs - name -- droppedShredKeys,
-              nulls = f.nulls - name -- droppedShredKeys))
-          }
-          try {
-            commitManifest(fs, dir, man.copy(version = man.version + 1,
-              schema = Some(next.json), stats = stats2,
-              colIds = man.colIds - name,
-              colStats = man.colStats - name,
-              colSketches = man.colSketches - name,
-              idhw = man.idhw - name,
-              colHists = man.colHists - name,
-              shredCols = man.shredCols.filterNot(_.column == name),
-              op = "dropColumn", opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+                 name: String): Unit =
+    commitMetadata(fsFor(spark, tablePath), new Path(tablePath),
+      "dropColumn") { head =>
+      val man = head.getOrElse(throw new IllegalArgumentException(
+        s"dropColumn: no committed graft table at $tablePath"))
+      val cur = man.schema.map(s =>
+        DataType.fromJson(s).asInstanceOf[StructType]).getOrElse(
+        throw new IllegalStateException(
+          s"dropColumn: $tablePath records no schema (pre-schema " +
+            "manifest) — run one merge first"))
+      require(man.nextColId > 0L,
+        s"dropColumn: $tablePath predates field-id stamping — " +
+          "migrate with a full rewrite (REPLACE TABLE / overwrite) " +
+          "first")
+      require(cur.fieldNames.contains(name),
+        s"dropColumn: no column '$name' in $tablePath " +
+          s"(columns: ${cur.fieldNames.mkString(", ")})")
+      require(!man.keyCols.contains(name),
+        s"dropColumn: '$name' is a merge key")
+      man.checks.foreach { case (cn, sql) =>
+        require(!checkPredicateColumns(spark, sql, cur)
+            .exists(_.equalsIgnoreCase(name)),
+          s"dropColumn: '$name' is referenced by CHECK constraint " +
+            s"'$cn' CHECK ($sql) — drop the constraint first")
       }
+      generatedReferences(spark, cur).foreach { case (gc, g, r) =>
+        require(!r.equalsIgnoreCase(name),
+          s"dropColumn: '$name' is referenced by generated column " +
+            s"'$gc' GENERATED ALWAYS AS ($g) — drop '$gc' first")
+      }
+      val inCluster = man.clusterCols.exists { e =>
+        e.indexOf(':') match {
+          case -1 => e == name
+          case i => e.substring(i + 1).split(',').map(_.trim)
+            .contains(name)
+        }
+      }
+      require(!inCluster, s"dropColumn: '$name' is a cluster column")
+      require(!man.bloomCols.contains(name),
+        s"dropColumn: '$name' is a Bloom-indexed column")
+      require(cur.fields.exists(f =>
+        f.name != name && !man.keyCols.contains(f.name)),
+        s"dropColumn: '$name' is the last non-key column")
+      val next = StructType(cur.fields.filterNot(_.name == name))
+      // a dropped variant column takes its shred declarations (and
+      // their hidden stats keys) with it — a later same-named
+      // column must not inherit stale extraction stats
+      val droppedShredKeys = man.shredCols.filter(_.column == name)
+        .map(shredColName).toSet
+      val stats2 = man.stats.map { case (b, fss) =>
+        b -> fss.map(f => f.copy(
+          mins = f.mins - name -- droppedShredKeys,
+          maxs = f.maxs - name -- droppedShredKeys,
+          nulls = f.nulls - name -- droppedShredKeys))
+      }
+      Some(man.copy(
+        schema = Some(next.json), stats = stats2,
+        colIds = man.colIds - name,
+        colStats = man.colStats - name,
+        colSketches = man.colSketches - name,
+        idhw = man.idhw - name,
+        colHists = man.colHists - name,
+        shredCols = man.shredCols.filterNot(_.column == name)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"dropColumn: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
-  }
 
   /** Operational introspection (Delta's DESCRIBE DETAIL): one row with
     * the table's current version, bucket count, live epoch count,
@@ -3253,27 +3113,10 @@ object MergeWriter {
     // metadata-only commit with the usual bounded rebase: losing the
     // version CAS to a concurrent merge just means the stats are one
     // commit staler than the head — still the estimates they claim to be
-    var attempt = 0
-    while (attempt <= 5) {
-      currentManifest(fs, dir) match {
-        case None => return computed
-        case Some(man) =>
-          try {
-            commitManifest(fs, dir,
-              man.copy(version = man.version + 1, colStats = computed,
-                statsVersion = man0.version, statsRows = rows,
-                colSketches = sketchOf,
-                colHists = histOf,
-                op = "analyze",
-                opTs = System.currentTimeMillis()))
-            gc(fs, dir)
-            return computed
-          } catch { case _: java.io.IOException => attempt += 1 }
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"analyzeTable: lost the commit race to concurrent writers of " +
-        s"$tablePath on every retry — re-run against the new table state")
+    commitMetadata(fs, dir, "analyze")(_.map(_.copy(colStats = computed,
+      statsVersion = man0.version, statsRows = rows,
+      colSketches = sketchOf, colHists = histOf)))
+    computed
   }
 
   /** Commit history over the RETAINED manifest window (Delta's
@@ -6645,6 +6488,9 @@ object MergeWriter {
                         ms: Long = 0L): Unit = {
     val fs = fsFor(spark, groupPath)
     val dir = new Path(groupPath)
+    // the group twin of [[commitMetadata]] (a GroupManifest head, group
+    // commit and group gc): gc runs after the winning commit, never
+    // inside the lost-CAS retry
     var attempt = 0
     while (attempt <= 5) {
       currentGroupManifest(fs, dir) match {
@@ -6655,14 +6501,16 @@ object MergeWriter {
           val m = math.max(0L, ms)
           if (cur.tables.values.forall(t =>
               t.retainVersions == v && t.retainMs == m)) return
-          try {
-            commitGroupManifest(fs, dir, GroupManifest(cur.version + 1,
-              cur.tables.map { case (n, t) =>
-                n -> t.copy(retainVersions = v, retainMs = m) },
-              cur.txns, "retention", System.currentTimeMillis()))
-            gcGroup(fs, dir)
-            return
-          } catch { case _: java.io.IOException => attempt += 1 }
+          val won =
+            try {
+              commitGroupManifest(fs, dir, GroupManifest(cur.version + 1,
+                cur.tables.map { case (n, t) =>
+                  n -> t.copy(retainVersions = v, retainMs = m) },
+                cur.txns, "retention", System.currentTimeMillis()))
+              true
+            } catch { case _: java.io.IOException => false }
+          if (won) { gcGroup(fs, dir); return }
+          attempt += 1
       }
     }
     throw new java.util.ConcurrentModificationException(

@@ -511,6 +511,9 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     MergeWriter.expireTxns(spark, dir, Seq("a"))
     assert(MergeWriter.describeTable(spark, dir).collect()(0)
       .getAs[Int]("n_txns") == 1)
+    // the expiry is its own history entry, not a copy of the last fold
+    assert(MergeWriter.tableHistory(spark, dir).head()
+      .getAs[String]("op") == "expireTxns")
     // a's guard is gone — a replayed delivery re-applies (the documented
     // cost of expiry; only decommissioned writers may be expired) —
     // while b's survives the expiry commit
@@ -1263,6 +1266,168 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       val vs = MergeWriter.availableVersions(spark, dir)
       assert(vs == (vs.head to vs.last), s"non-sequential versions $vs")
     } finally MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
+  }
+
+  test("metadata ops: a lost CAS re-reads the head and commits once; " +
+      "a persistent loss conflicts and leaves the table unmoved") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import org.apache.spark.sql.types._
+    // loses the next `losses` puts (nothing committed), then delegates
+    class Losing(var losses: Int) extends MergeWriter.CommitPrimitive {
+      var puts = 0
+      override def putIfAbsent(fs: FileSystem, target: HPath, stage: HPath,
+                               body: Array[Byte]): Boolean = {
+        puts += 1
+        if (losses > 0) { losses -= 1; false }
+        else MergeWriter.LinkOrRenameCommit.putIfAbsent(fs, target, stage, body)
+      }
+    }
+    // runs `race` (a concurrent writer winning the version) just before
+    // the first put, which then finds its target taken
+    class Racing(race: () => Unit) extends MergeWriter.CommitPrimitive {
+      private var pending = true
+      override def putIfAbsent(fs: FileSystem, target: HPath, stage: HPath,
+                               body: Array[Byte]): Boolean = {
+        if (pending) { pending = false; race() }
+        MergeWriter.LinkOrRenameCommit.putIfAbsent(fs, target, stage, body)
+      }
+    }
+    def newTable(): String = {
+      val dir = Files.createTempDirectory("metaop").toString + "/t"
+      MergeWriter.merge(spark, dir,
+        Seq((1L, 1, "a"), (2L, 2, "b")).toDF("id", "v", "s"), Seq("id"),
+        buckets = 2, txn = Some(("app", 1L)))
+      dir
+    }
+    def mergeOne(dir: String, id: Long): Unit = MergeWriter.merge(spark, dir,
+      Seq((id, id.toInt, "x")).toDF("id", "v", "s"), Seq("id"))
+    def last(dir: String): Long = MergeWriter.availableVersions(spark, dir).last
+    def newOps(dir: String, since: Long): Seq[(Long, String)] =
+      MergeWriter.tableHistory(spark, dir).collect().toSeq
+        .map(r => r.getAs[Long]("version") -> r.getAs[String]("op"))
+        .filter(_._1 > since).reverse
+    def commented(dir: String): StructType =
+      StructType(MergeWriter.readTable(spark, dir).schema.fields.map(f =>
+        if (f.name != "s") f
+        else f.copy(metadata = new MetadataBuilder()
+          .putString("comment", "free text").build())))
+    val none: String => Unit = _ => ()
+    // (op as history records it, setup, the operation)
+    val ops: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("expireTxns", none, MergeWriter.expireTxns(spark, _, Seq("app"))),
+      ("tag", none, MergeWriter.createTag(spark, _, "t1")),
+      ("untag", MergeWriter.createTag(spark, _, "t1"),
+        MergeWriter.dropTag(spark, _, "t1")),
+      ("addconstraint", none,
+        MergeWriter.addCheckConstraint(spark, _, "c1", "v >= 0")),
+      ("dropconstraint",
+        MergeWriter.addCheckConstraint(spark, _, "c1", "v >= 0"),
+        MergeWriter.dropCheckConstraint(spark, _, "c1")),
+      ("retention", none, MergeWriter.setRetention(spark, _, versions = 4)),
+      ("restore", mergeOne(_, 3L),
+        d => MergeWriter.restoreVersion(spark, d, last(d) - 1)),
+      ("addColumns", none, MergeWriter.addColumns(spark, _,
+        StructType(Seq(StructField("extra", StringType))))),
+      ("renameColumn", none, MergeWriter.renameColumn(spark, _, "s", "s2")),
+      ("widenColumn", none, MergeWriter.widenColumn(spark, _, "v", LongType)),
+      ("alterDefault", none,
+        d => MergeWriter.replaceSchemaMetadata(spark, d, commented(d))),
+      ("dropColumn", none, MergeWriter.dropColumn(spark, _, "s")),
+      ("analyze", none, d => { MergeWriter.analyzeTable(spark, d); () }))
+    try {
+      ops.foreach { case (op, setup, run) =>
+        val dir = newTable()
+        setup(dir)
+        val v0 = last(dir)
+        val always = new Losing(Int.MaxValue)
+        MergeWriter.setCommitPrimitive(always)
+        val e = intercept[java.util.ConcurrentModificationException](run(dir))
+        MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
+        assert(e.getMessage.startsWith(s"$op:"), e.getMessage)
+        assert(always.puts == 6, s"$op: ${always.puts} commit attempts")
+        assert(last(dir) == v0, s"$op moved the table without committing")
+        val once = new Losing(1)
+        MergeWriter.setCommitPrimitive(once)
+        run(dir)
+        MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
+        assert(once.puts == 2, s"$op: ${once.puts} commit attempts")
+        assert(newOps(dir, v0) == Seq(v0 + 1 -> op))
+      }
+      // createTag resolves its default version AT THE CALL: a merge that
+      // wins the race is not what the tag certifies
+      val tagged = newTable()
+      val t0 = last(tagged)
+      MergeWriter.setCommitPrimitive(new Racing(() => mergeOne(tagged, 9L)))
+      MergeWriter.createTag(spark, tagged, "certified")
+      MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
+      assert(MergeWriter.resolveVersionRef(spark, tagged, "certified") == t0)
+      assert(newOps(tagged, t0).map(_._2) == Seq("merge", "tag"))
+      // addCheckConstraint's validation scan never saw the racer's rows:
+      // it conflicts instead of committing an unproven constraint
+      val checked = newTable()
+      val c0 = last(checked)
+      MergeWriter.setCommitPrimitive(new Racing(() => mergeOne(checked, -9L)))
+      val moved = intercept[java.util.ConcurrentModificationException](
+        MergeWriter.addCheckConstraint(spark, checked, "pos", "v >= 0"))
+      MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
+      assert(moved.getMessage.contains("during validation"), moved.getMessage)
+      assert(newOps(checked, c0).map(_._2) == Seq("merge"))
+    } finally MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
+  }
+
+  test("metadata ops: a gc failure after the commit never re-runs it") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import org.apache.spark.sql.types._
+    FaultyLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    // arms the fault once the first commit has landed: the next delete of
+    // a committed manifest is that commit's gc dropping the oldest version
+    class ArmOnFirstWin extends MergeWriter.CommitPrimitive {
+      private var armed = false
+      override def putIfAbsent(fs: FileSystem, target: HPath, stage: HPath,
+                               body: Array[Byte]): Boolean = {
+        val won = MergeWriter.LinkOrRenameCommit
+          .putIfAbsent(fs, target, stage, body)
+        if (won && !armed) {
+          armed = true
+          FaultyLocalFileSystem.failNextDelete(
+            _.getName.startsWith("_manifest-"))
+        }
+        won
+      }
+    }
+    val ops: Seq[(String, String => Unit)] = Seq(
+      ("tag", MergeWriter.createTag(spark, _, "t1")),
+      // a 1 ms age window still lets gc drop the oldest manifest
+      ("retention", MergeWriter.setRetention(spark, _, ms = 1L)),
+      ("restore", d => MergeWriter.restoreVersion(spark, d,
+        MergeWriter.availableVersions(spark, d).head)),
+      ("addColumns", MergeWriter.addColumns(spark, _,
+        StructType(Seq(StructField("extra", StringType))))),
+      ("renameColumn", MergeWriter.renameColumn(spark, _, "v", "w")))
+    try ops.foreach { case (op, run) =>
+      val local = Files.createTempDirectory("gcfault").toString + "/t"
+      MergeWriter.merge(spark, local, Seq((1L, 1)).toDF("id", "v"),
+        Seq("id"), buckets = 2)
+      MergeWriter.merge(spark, local, Seq((2L, 2)).toDF("id", "v"), Seq("id"))
+      val v0 = MergeWriter.availableVersions(spark, local).last
+      MergeWriter.setCommitPrimitive(new ArmOnFirstWin)
+      val out = scala.util.Try(run("faulty://" + local))
+      MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
+      FaultyLocalFileSystem.disarm()
+      // the gc fault surfaces as itself, after the commit landed ...
+      assert(out.failed.toOption.exists(
+        _.isInstanceOf[java.io.FileNotFoundException]), s"$op: $out")
+      // ... and exactly one version carries the operation
+      val after = MergeWriter.tableHistory(spark, local).collect()
+        .map(r => r.getAs[Long]("version") -> r.getAs[String]("op"))
+        .filter(_._1 > v0).toSeq
+      assert(after == Seq(v0 + 1 -> op), s"$op committed $after")
+    } finally {
+      MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
+      FaultyLocalFileSystem.disarm()
+    }
   }
 
   test("retention: a raised version window survives gc; age window too") {
