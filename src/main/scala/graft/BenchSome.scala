@@ -15,6 +15,9 @@ object BenchSome {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      // Bench's generated-class cache size, so an A/B here measures the
+      // engine Bench measures (the default 100 entries re-compiles)
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

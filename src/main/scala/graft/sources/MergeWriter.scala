@@ -1143,8 +1143,8 @@ object MergeWriter {
 
   /** Publish one segment if absent. Content-addressed: a concurrent
     * writer losing the no-overwrite race published the SAME bytes, so a
-    * lost CAS is success. A crash mid-publish leaves a `.tmp-seg-`
-    * stage file for gc's age guard.
+    * lost CAS is success. A crash mid-publish, or a failed stage
+    * cleanup, leaves a `.tmp-seg-` stage file for gc's age guard.
     */
   private def writeSegmentIfAbsent(fs: FileSystem, dir: Path, hash: String,
                                    body: String): Unit = {
@@ -1152,12 +1152,8 @@ object MergeWriter {
     if (fs.exists(target)) return
     val segDir = new Path(dir, SegDirName)
     fs.mkdirs(segDir)
-    val tmp = new Path(segDir, s".tmp-seg-${UUID.randomUUID()}")
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    val out = fs.create(tmp, false)
-    try out.write(bytes) finally out.close()
-    commitPrimitive.putIfAbsent(fs, target, tmp, bytes)
-    fs.delete(tmp, false)
+    publishAtomically(fs, segDir, target, body, stagePrefix = ".tmp-seg-")
+    ()
   }
 
   private def loadSegment(fs: FileSystem, dir: Path,
@@ -1179,10 +1175,11 @@ object MergeWriter {
 
   /** The segmented commit: per-range payloads, reuse-by-equality against
     * the base manifest's hashes (carried on [[Manifest.segs]] as hints),
-    * segment publishes for the changed ranges only, then the head CAS.
+    * segment publishes for the changed ranges only, then the head CAS
+    * (false = lost).
     */
   private def segmentedPublish(fs: FileSystem, dir: Path, target: Path,
-                               m: Manifest): Unit = {
+                               m: Manifest): Boolean = {
     val w = segWidth(m.buckets)
     val nSeg = math.max(1, (m.buckets + w - 1) / w)
     val epochsR = byRange(m.epochs, w)
@@ -1218,15 +1215,16 @@ object MergeWriter {
   }
 
   /** The one manifest-publish seam: inline below the bucket threshold,
-    * segmented above it.
+    * segmented above it. False = lost CAS.
     */
   private def publishManifest(fs: FileSystem, dir: Path, target: Path,
-                              m: Manifest): Unit =
+                              m: Manifest): Boolean =
     if (m.buckets > SegInlineMaxBuckets)
       segmentedPublish(fs, dir, target, m)
     else publishAtomically(fs, dir, target, manifestBody(m))
 
-  private def commitManifest(fs: FileSystem, dir: Path, m: Manifest): Unit =
+  private def commitManifest(fs: FileSystem, dir: Path,
+                             m: Manifest): Boolean =
     publishManifest(fs, dir,
       new Path(dir, f"$ManifestPrefix${m.version}%016d.json"), m)
 
@@ -1235,7 +1233,7 @@ object MergeWriter {
     * epoch staging, same rebase loop, different manifest lineage.
     */
   private def refCommit(fs: FileSystem, dir: Path, ref: Option[String],
-                        m: Manifest): Unit = ref match {
+                        m: Manifest): Boolean = ref match {
     case None => commitManifest(fs, dir, m)
     case Some(b) => publishManifest(fs, dir,
       new Path(dir, f"${branchManPrefix(b)}${m.version}%016d.json"), m)
@@ -1300,51 +1298,156 @@ object MergeWriter {
     * version: losing the version CAS to a concurrent merge means the
     * derivation is stale, so surface the protocol's documented
     * `ConcurrentModificationException` ("re-run against the new table
-    * state") instead of [[publishAtomically]]'s raw IOException — safe
-    * either way, but callers catch the protocol exception.
+    * state").
     */
   private def commitOrConflict(fs: FileSystem, dir: Path, m: Manifest,
                                op: String): Unit =
-    try commitManifest(fs, dir,
-      m.copy(op = op, opTs = System.currentTimeMillis()))
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$op: lost the version-${m.version} commit race to a concurrent " +
-            s"writer of $dir — re-run against the new table state", e)
-    }
+    if (!commitManifest(fs, dir,
+        m.copy(op = op, opTs = System.currentTimeMillis())))
+      throw new java.util.ConcurrentModificationException(
+        s"$op: lost the version-${m.version} commit race to a concurrent " +
+          s"writer of $dir — re-run against the new table state")
 
   /** The metadata-commit rule (PROTOCOL.md "Optimistic concurrency"):
-    * each attempt re-reads the head and hands it to `next` (`None` = no
-    * committed table), so the operation's validation re-runs against
-    * whatever a concurrent writer committed. `next` returning `None`
-    * means nothing to do; `Some(m)` commits `m` as the head's successor
-    * with `op`/`opTs` stamped. Only a lost CAS retries — at most 6
-    * attempts, then `ConcurrentModificationException` naming `op`. gc
-    * runs once, after the winning commit and outside the retry, so a gc
-    * failure never re-runs a commit that already landed.
+    * [[optimisticCommit]] with no facts read, so every lost race hands
+    * the new head to `next` (`None` = no committed table) and the
+    * operation's validation re-runs against whatever a concurrent writer
+    * committed. `next` returning `None` means nothing to do; `Some(m)`
+    * commits `m` as the head's successor. gc runs once, after the
+    * winning commit and outside the retry, so a gc failure never re-runs
+    * a commit that already landed.
     */
   private def commitMetadata(fs: FileSystem, dir: Path, op: String)(
-      next: Option[Manifest] => Option[Manifest]): Unit = {
-    var attempt = 0
-    while (attempt < 6) {
-      attempt += 1
-      val head = currentManifest(fs, dir)
-      (head, next(head)) match {
-        case (Some(cur), Some(m)) =>
-          val won =
-            try {
-              commitManifest(fs, dir, m.copy(version = cur.version + 1,
-                op = op, opTs = System.currentTimeMillis()))
-              true
-            } catch { case _: java.io.IOException => false } // lost CAS
-          if (won) { gc(fs, dir); return }
-        case _ => return
+      next: Option[Manifest] => Option[Manifest]): Unit =
+    if (optimisticCommit(op, tableLineage(fs, dir, None),
+        currentManifest(fs, dir), Seq.empty[Int])(next)) gc(fs, dir)
+
+  /** A manifest lineage an optimistic data commit targets: a table's
+    * main or branch lineage (heads are [[Manifest]]s, conflicts are
+    * tracked per bucket) or a group's (heads are [[GroupManifest]]s,
+    * conflicts are tracked per member). `put` publishes a head as the
+    * given version with `op` and the current time stamped (false = lost
+    * CAS); `sig` is one bucket's or member's conflict-detection
+    * signature (`None` = nothing committed yet); `table` is a head's
+    * table-level facts (a group head has none).
+    */
+  private final case class Lineage[H, K](where: String, what: String,
+                                         noun: String,
+                                         head: () => Option[H],
+                                         version: H => Long,
+                                         put: (H, Long, String) => Boolean,
+                                         sig: (Option[H], K) => Any,
+                                         table: H => Option[Manifest])
+
+  private def tableLineage(fs: FileSystem, dir: Path,
+                           ref: Option[String]): Lineage[Manifest, Int] =
+    Lineage(dir.toString, "table", "buckets", () => refCurrent(fs, dir, ref),
+      _.version, (m, v, op) => refCommit(fs, dir, ref, m.copy(version = v,
+        op = op, opTs = System.currentTimeMillis())),
+      bucketSigOpt, Some(_))
+
+  private def groupLineage(fs: FileSystem,
+                           dir: Path): Lineage[GroupManifest, String] =
+    Lineage(dir.toString, "group", "members",
+      () => currentGroupManifest(fs, dir), _.version,
+      (g, v, op) => commitGroupManifest(fs, dir, g.copy(version = v,
+        op = op, opTs = System.currentTimeMillis())),
+      // the full member signature, not epoch pointers alone: a write-only
+      // eq-delete commit appends overlays/eqds without moving any pointer
+      (g, n) => g.flatMap(_.tables.get(n)).map(m =>
+        (m.epochs, m.overlays, m.eqds)),
+      _ => None)
+
+  /** The table-level facts a data write derived its staged state from,
+    * beside its touched buckets' signatures. `None` marks a fact the
+    * write never depended on, so it never conflicts.
+    */
+  private final case class ReadFacts(
+      // the modulus the staged rows were hashed with
+      buckets: Option[Int] = None,
+      // the schema the batch was validated and written under
+      schema: Option[Option[String]] = None,
+      // copy-on-write only: the same logical schema serializes with
+      // different nullability by provenance (Seq-derived vs parquet-read
+      // frames)
+      schemaIgnoresNullability: Boolean = false,
+      // the merge keys the rows were bucketed by
+      keys: Option[Seq[String]] = None,
+      // the CHECK set the rows were proven under
+      checks: Option[Map[String, String]] = None,
+      // the identity high-water the batch's values were reserved against
+      idhw: Option[Map[String, Long]] = None)
+
+  /** THE data-commit conflict rule (PROTOCOL.md "Optimistic
+    * concurrency"): the reasons head `cur` invalidates a write that read
+    * the `read` signatures and `facts` — empty means the write rebases.
+    */
+  private def conflicts[H, K](lin: Lineage[H, K], read: Seq[(K, Any)],
+                              facts: ReadFacts, cur: H): Seq[String] = {
+    def same(x: Option[String], y: Option[String]): Boolean = x == y ||
+      facts.schemaIgnoresNullability && x.nonEmpty && y.nonEmpty &&
+        org.apache.spark.sql.GraftColumnShim.sameTypeIgnoreNullability(
+          DataType.fromJson(x.get), DataType.fromJson(y.get))
+    def cols(ks: Seq[String]) = ks.mkString("(", ",", ")")
+    val moved = read.collect { case (k, s) if lin.sig(Some(cur), k) != s => k }
+    Option.when(moved.nonEmpty)(
+      s"${lin.noun} ${moved.mkString("{", ",", "}")}").toSeq ++
+      lin.table(cur).toSeq.flatMap { m =>
+        facts.buckets.filter(_ != m.buckets)
+          .map(b => s"bucket count ${m.buckets} != $b") ++
+        facts.schema.filterNot(same(m.schema, _)).map(_ => "schema changed") ++
+        facts.keys.filter(k => m.keyCols.nonEmpty && m.keyCols != k)
+          .map(k => s"merge keys ${cols(m.keyCols)} != ${cols(k)}") ++
+        facts.checks.filter(_ != m.checks)
+          .map(_ => "CHECK constraints changed") ++
+        facts.idhw.filter(_ != m.idhw).map(_ => "identity high-water moved")
       }
+  }
+
+  /** THE optimistic data commit (Delta's OptimisticTransaction shape,
+    * PROTOCOL.md "Optimistic concurrency"). `base` is the head the
+    * write's staged state was derived from and `touched` the buckets (or
+    * members) it read-modified. Each attempt publishes `next(base)` as
+    * `base`'s successor, version, `op` and time stamped (`next`
+    * returning `None` means nothing is left to do). A lost put re-reads
+    * the head: the write rebases onto it unless [[conflicts]] finds a
+    * fact it read moved, which throws `ConcurrentModificationException`
+    * naming `op` and the reasons — as does a 6th lost put. An I/O error
+    * propagates unchanged and is never retried. True = committed.
+    */
+  private def optimisticCommit[H, K](op: String, lin: Lineage[H, K],
+                                     base: Option[H], touched: Seq[K],
+                                     facts: ReadFacts = ReadFacts())(
+      next: Option[H] => Option[H]): Boolean = {
+    // only a lost race needs the read signatures
+    lazy val read = touched.map(k => k -> lin.sig(base, k))
+    def conflict(why: String): Nothing =
+      throw new java.util.ConcurrentModificationException(
+        s"$op: $why — re-run against the new ${lin.what} state")
+    var cur = base
+    var pending = next(cur)
+    var attempt = 0
+    while (pending.nonEmpty) {
+      attempt += 1
+      if (lin.put(pending.get, cur.fold(1L)(lin.version(_) + 1), op))
+        return true
+      if (attempt == 6)
+        conflict(s"lost the commit race to concurrent writers of " +
+          s"${lin.where} on every retry")
+      cur = lin.head()
+      if (cur.isEmpty && base.nonEmpty)
+        conflict(s"lost the commit race and ${lin.where} holds no " +
+          s"committed ${lin.what}")
+      // re-derive before judging: a winner that already applied this
+      // write (a concurrently redelivered txn) leaves nothing to do
+      pending = next(cur)
+      val why = cur.fold(Seq.empty[String])(conflicts(lin, read, facts, _))
+      if (pending.nonEmpty && why.nonEmpty)
+        conflict(s"concurrent writer rewrote contested state of " +
+          s"${lin.where} (version ${lin.version(cur.get)}: " +
+          s"${why.mkString(", ")})")
     }
-    throw new java.util.ConcurrentModificationException(
-      s"$op: lost the commit race to concurrent writers of $dir on " +
-        "every retry — re-run against the new table state")
+    false
   }
 
   /** Metadata-only commit recording a streaming txn guard on an empty
@@ -1366,12 +1469,9 @@ object MergeWriter {
         case None => return // table vanished — nothing to guard
         case Some(man) =>
           if (man.txns.get(t._1).exists(_ >= t._2)) return
-          try {
-            refCommit(fs, dir, ref, man.copy(version = man.version + 1,
+          if (refCommit(fs, dir, ref, man.copy(version = man.version + 1,
               txns = man.txns + t, op = "txn",
-              opTs = System.currentTimeMillis()))
-            return
-          } catch { case _: java.io.IOException => () } // lost CAS — rebase
+              opTs = System.currentTimeMillis()))) return
       }
     }
     throw new java.io.IOException(
@@ -1410,7 +1510,9 @@ object MergeWriter {
       * `stage` is a pre-written staging file holding `body` inside the
       * table directory (implementations may rename it or ignore it and
       * upload `body` directly); the CALLER deletes it afterwards either
-      * way, so implementations must not leave `target` referencing it.
+      * way, best-effort, so implementations must not leave `target`
+      * referencing it. Return false only for a lost race: an I/O error
+      * must throw, and callers never retry it.
       */
     def putIfAbsent(fs: FileSystem, target: Path, stage: Path,
                     body: Array[Byte]): Boolean
@@ -1447,26 +1549,29 @@ object MergeWriter {
   private[graft] def currentCommitPrimitive: CommitPrimitive =
     commitPrimitive
 
-  /** The atomic no-overwrite publish shared by table and group commits:
-    * stage the body under a dot-file (invisible to readers — the
-    * manifest listing filters on prefix), then publish through the
-    * installed [[CommitPrimitive]]. Loss surfaces as the protocol's
-    * commit-failed IOException, which every caller maps to rebase /
-    * retry / `ConcurrentModificationException` per its own contract.
+  /** The atomic no-overwrite publish shared by table, group and segment
+    * commits: stage the body under a dot-file in `dir` (invisible to
+    * readers — the manifest listing filters on prefix), then publish
+    * through the installed [[CommitPrimitive]]. Returns whether this
+    * put won: false is a lost CAS, which every caller maps to rebase /
+    * retry / `ConcurrentModificationException` per its own contract. An
+    * I/O error staging or publishing propagates unchanged. Removing the
+    * stage file afterwards is best-effort — the put's outcome is already
+    * decided, and gc's aged stage-file sweep reclaims an orphan.
     */
   private def publishAtomically(fs: FileSystem, dir: Path, target: Path,
-                                body: String): Unit = {
-    val tmp = new Path(dir, s".tmp-manifest-${UUID.randomUUID()}")
+                                body: String,
+                                stagePrefix: String = ".tmp-manifest-")
+      : Boolean = {
+    val tmp = new Path(dir, stagePrefix + UUID.randomUUID())
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     val out = fs.create(tmp, false)
     try out.write(bytes) finally out.close()
     val won = commitPrimitive.putIfAbsent(fs, target, tmp, bytes)
     // the stage file may already be gone (a rename-based primitive
     // consumed it on the win path) — delete is a no-op then
-    fs.delete(tmp, false)
-    if (!won)
-      throw new java.io.IOException(
-        s"merge: manifest commit $target failed (concurrent writer?)")
+    try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
+    won
   }
 
   /** How long an UNREFERENCED epoch directory survives gc. A concurrent
@@ -2246,10 +2351,14 @@ object MergeWriter {
         s"createBranch: $tablePath holds no committed graft table"))
     require(branchHead(fs, dir, name).isEmpty,
       s"createBranch: branch '$name' already exists on $tablePath")
-    publishManifest(fs, dir,
-      new Path(dir, f"${branchManPrefix(name)}${man.version}%016d.json"),
-      man.copy(branchBase = man.version, op = "branch-create",
-        opTs = System.currentTimeMillis()))
+    if (!publishManifest(fs, dir,
+        new Path(dir, f"${branchManPrefix(name)}${man.version}%016d.json"),
+        man.copy(branchBase = man.version, op = "branch-create",
+          opTs = System.currentTimeMillis())))
+      throw new java.util.ConcurrentModificationException(
+        s"createBranch: a racing createBranch('$name') on $tablePath " +
+          s"forked at version ${man.version} first — re-check the branch " +
+          "state and retry")
     // VERIFY after publish: the file-name CAS only collides when two
     // racing creators fork at the SAME main version — a main commit
     // between their reads gives them different file names and both
@@ -2298,18 +2407,14 @@ object MergeWriter {
           s"${cur.version} since branch '$name' forked at " +
           s"${bh.branchBase} — the staged (and audited) state no longer " +
           "applies; re-stage on a fresh branch")
-    try {
-      commitManifest(fs, dir, bh.copy(version = cur.version + 1,
+    // a lost CAS means a main commit raced the publish
+    if (!commitManifest(fs, dir, bh.copy(version = cur.version + 1,
         branchBase = -1L, op = "fast_forward",
-        opTs = System.currentTimeMillis()))
-    } catch {
-      case e: java.io.IOException =>
-        // the no-overwrite CAS lost: a main commit raced the publish
-        throw new java.util.ConcurrentModificationException(
-          s"fastForward: a concurrent main commit on $tablePath beat " +
-            s"the publish of branch '$name' — the staged state no " +
-            "longer applies; re-stage on a fresh branch", e)
-    }
+        opTs = System.currentTimeMillis())))
+      throw new java.util.ConcurrentModificationException(
+        s"fastForward: a concurrent main commit on $tablePath beat " +
+          s"the publish of branch '$name' — the staged state no " +
+          "longer applies; re-stage on a fresh branch")
     // retire ONLY the published prefix (K ≤ the head this publish
     // carried): a staged commit racing the publish lands at K+1 and
     // must not be silently destroyed — it survives as a still-listed
@@ -4304,10 +4409,16 @@ object MergeWriter {
         identityExtremes(spark, s"$tablePath/$epoch", morIdSpec)
       else Map.empty[String, Long]
     // 4. one manifest commit: overlays appended, DVs re-pointed, fresh
-    //    buckets (no stored pointer yet) adopt the epoch as their BASE
-    var base = man
-    var attempt = 0
-    while (true) {
+    //    buckets (no stored pointer yet) adopt the epoch as their BASE.
+    //    It rebases iff nothing this upsert read-modified moved: the
+    //    resolved positions and the overlay append are both keyed to the
+    //    touched buckets' signatures at scan time, the overlay rows were
+    //    proven under man's constraint set, and identity values were
+    //    reserved against man's high-water
+    optimisticCommit(opName, tableLineage(fs, new Path(tablePath), ref),
+      Some(man), touched, ReadFacts(Some(man.buckets), Some(man.schema),
+        keys = Some(keys), checks = Some(man.checks),
+        idhw = Option.when(morIdSpec.nonEmpty)(man.idhw)))(_.map { base =>
       val freshBase = written.filterNot(base.epochs.contains)
       val stats2 = (base.stats.map { case (b, fss) =>
         val withDv =
@@ -4321,44 +4432,16 @@ object MergeWriter {
         b -> (withDv ++ (if (written(b)) overlayStats.getOrElse(b, Seq.empty)
                          else Seq.empty))
       }) ++ overlayStats.filter { case (b, _) => !base.stats.contains(b) }
-      try {
-        refCommit(fs, new Path(tablePath), ref,
-          withRefreshedStats(base.copy(version = base.version + 1,
-            epochs = base.epochs ++ freshBase.map(_ -> epoch).toMap,
-            overlays = base.overlays ++
-              written.intersect(base.epochs.keySet).map(b =>
-                b -> (base.overlays.getOrElse(b, Seq.empty) :+ epoch)).toMap,
-            stats = stats2,
-            txns = base.txns ++ txn,
-            idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt),
-            op = opName, opTs = System.currentTimeMillis()), batchSk))
-        return true
-      } catch {
-        case ex: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw ex
-          val cur = refCurrent(fs, new Path(tablePath), ref)
-            .getOrElse(throw ex)
-          // rebase iff nothing this upsert read-modified moved: the
-          // resolved positions and the overlay append are both keyed to
-          // the touched buckets' signatures at scan time
-          val contested = cur.buckets != man.buckets ||
-            cur.schema != man.schema ||
-            (cur.keyCols.nonEmpty && cur.keyCols != keys) ||
-            // the overlay rows were proven under man's constraint set
-            cur.checks != man.checks ||
-            // identity values were reserved against man's high-water
-            (morIdSpec.nonEmpty && cur.idhw != man.idhw) ||
-            touched.exists(b => bucketSig(cur, b) != bucketSig(man, b))
-          if (contested)
-            throw new java.util.ConcurrentModificationException(
-              s"merge: concurrent writer rewrote contested state of " +
-                s"$tablePath (version ${cur.version}) under a merge-on-" +
-                "read upsert — re-run against the new table state")
-          base = cur
-      }
-    }
-    false // unreachable
+      withRefreshedStats(base.copy(
+        epochs = base.epochs ++ freshBase.map(_ -> epoch).toMap,
+        overlays = base.overlays ++
+          written.intersect(base.epochs.keySet).map(b =>
+            b -> (base.overlays.getOrElse(b, Seq.empty) :+ epoch)).toMap,
+        stats = stats2,
+        txns = base.txns ++ txn,
+        idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt)), batchSk)
+    })
+    true
   }
 
   /** MERGE-ON-READ keyed delete (Delta's deletion vectors / Iceberg v2
@@ -4427,10 +4510,15 @@ object MergeWriter {
           bucketEpochs(man, b).exists(e =>
             k.startsWith(s"$e/$BucketCol=$b/")) }
       }.toMap
-    var base = man
-    var attempt = 0
-    while (true) {
-      val stats2 = base.stats.map { case (b, fss) =>
+    // rebase iff nothing this delete read-modified moved: same modulus
+    // and schema, and every touched bucket's signature (pointer + DV
+    // identity) unchanged since the positions were resolved — anything
+    // else means the resolved positions are stale (a rewrite renumbered
+    // rows, a racing DV marked more)
+    optimisticCommit("delete", tableLineage(fs, new Path(tablePath), ref),
+      Some(man), touchedStored,
+      ReadFacts(Some(man.buckets), Some(man.schema)))(_.map { base =>
+      base.copy(stats = base.stats.map { case (b, fss) =>
         relKeysByBucket.get(b).filter(_.nonEmpty) match {
           case Some(dead) =>
             b -> fss.map { f =>
@@ -4441,35 +4529,9 @@ object MergeWriter {
             }
           case None => b -> fss
         }
-      }
-      try {
-        refCommit(fs, new Path(tablePath), ref,
-          base.copy(version = base.version + 1, stats = stats2,
-            op = "delete", opTs = System.currentTimeMillis()))
-        return true
-      } catch {
-        case e: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          val cur = refCurrent(fs, new Path(tablePath), ref)
-            .getOrElse(throw e)
-          // rebase iff nothing this delete read-modified moved: same
-          // modulus and schema, and every touched bucket's signature
-          // (pointer + DV identity) unchanged since the positions were
-          // resolved — anything else means the resolved positions are
-          // stale (a rewrite renumbered rows, a racing DV marked more)
-          val contested = cur.buckets != man.buckets ||
-            cur.schema != man.schema ||
-            touchedStored.exists(b => bucketSig(cur, b) != bucketSig(man, b))
-          if (contested)
-            throw new java.util.ConcurrentModificationException(
-              s"delete: concurrent writer rewrote contested state of " +
-                s"$tablePath (version ${cur.version}) under a deletion-" +
-                "vector delete — re-run against the new table state")
-          base = cur
-      }
-    }
-    false // unreachable
+      })
+    })
+    true
   }
 
   /** WRITE-ONLY merge-on-read keyed upsert/delete (Iceberg v2's
@@ -4612,10 +4674,14 @@ object MergeWriter {
       else Map.empty[String, Long]
     // 3. one manifest commit: overlays appended, eq-delete records
     //    appended with pre-commit epoch counts, fresh buckets adopt the
-    //    epoch as their base
-    var base = man
-    var attempt = 0
-    while (true) {
+    //    epoch as their base. It rebases iff nothing this upsert depends
+    //    on moved: the batch was validated under man's schema/constraint/
+    //    identity state, and the eq-delete scoping was computed against
+    //    the touched buckets' epoch lists
+    optimisticCommit(opName, tableLineage(fs, new Path(tablePath), ref),
+      Some(man), touched, ReadFacts(Some(man.buckets), Some(man.schema),
+        keys = Some(keys), checks = Some(man.checks),
+        idhw = Option.when(morIdSpec.nonEmpty)(man.idhw)))(_.map { base =>
       val freshBase = written.filterNot(base.epochs.contains)
       val stats2 = (base.stats.map { case (b, fss) =>
         b -> (fss ++ (if (written(b)) overlayStats.getOrElse(b, Seq.empty)
@@ -4629,44 +4695,17 @@ object MergeWriter {
           b -> (base.eqds.getOrElse(b, Seq.empty) :+
             EqDel(sidecar, bucketEpochs(base, b).length, incCount + delCount))
         }
-      try {
-        refCommit(fs, new Path(tablePath), ref,
-          withRefreshedStats(base.copy(version = base.version + 1,
-            epochs = base.epochs ++ freshBase.map(_ -> epoch).toMap,
-            overlays = base.overlays ++
-              written.intersect(base.epochs.keySet).map(b =>
-                b -> (base.overlays.getOrElse(b, Seq.empty) :+ epoch)).toMap,
-            stats = stats2,
-            eqds = eqds2,
-            txns = base.txns ++ txn,
-            idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt),
-            op = opName, opTs = System.currentTimeMillis()), batchSk))
-        return true
-      } catch {
-        case ex: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw ex
-          val cur = refCurrent(fs, new Path(tablePath), ref)
-            .getOrElse(throw ex)
-          // rebase iff nothing this upsert depends on moved: the batch
-          // was validated under man's schema/constraint/identity state,
-          // and the eq-delete scoping was computed against the touched
-          // buckets' epoch lists
-          val contested = cur.buckets != man.buckets ||
-            cur.schema != man.schema ||
-            (cur.keyCols.nonEmpty && cur.keyCols != keys) ||
-            cur.checks != man.checks ||
-            (morIdSpec.nonEmpty && cur.idhw != man.idhw) ||
-            touched.exists(b => bucketSig(cur, b) != bucketSig(man, b))
-          if (contested)
-            throw new java.util.ConcurrentModificationException(
-              s"$opName: concurrent writer rewrote contested state of " +
-                s"$tablePath (version ${cur.version}) under an equality-" +
-                "delete upsert — re-run against the new table state")
-          base = cur
-      }
-    }
-    false // unreachable
+      withRefreshedStats(base.copy(
+        epochs = base.epochs ++ freshBase.map(_ -> epoch).toMap,
+        overlays = base.overlays ++
+          written.intersect(base.epochs.keySet).map(b =>
+            b -> (base.overlays.getOrElse(b, Seq.empty) :+ epoch)).toMap,
+        stats = stats2,
+        eqds = eqds2,
+        txns = base.txns ++ txn,
+        idhw = advanceIdhw(base.idhw, morIdSpec, morIdExt)), batchSk)
+    })
+    true
   }
 
   /** Relative file key of a bucket file — the suffix `_metadata
@@ -5588,7 +5627,8 @@ object MergeWriter {
       s"createTable: $tablePath already holds a committed graft table")
     fs.mkdirs(dir)
     val clean = stripSchemaIds(schema)
-    commitManifest(fs, dir, Manifest(1L, buckets, Map.empty, Map.empty,
+    // a lost CAS means a racing creator committed first
+    if (!commitManifest(fs, dir, Manifest(1L, buckets, Map.empty, Map.empty,
       Some(clean.json), keys, clusterBy, Map.empty, bloomBy, bloomItems,
       "create", System.currentTimeMillis(),
       math.max(KeepManifests, retainVersions), math.max(0L, retainMs),
@@ -5603,7 +5643,9 @@ object MergeWriter {
       nextColId = clean.fields.length + 1L,
       deleteVectors = deleteVectors || eqDeletes,
       eqDeletes = eqDeletes,
-      shredCols = shred))
+      shredCols = shred)))
+      throw new IllegalArgumentException(
+        s"createTable: $tablePath already holds a committed graft table")
   }
 
   /** The touched-bucket set of a bucketed incoming frame — one bounded
@@ -5726,7 +5768,7 @@ object MergeWriter {
     }
 
   private def commitGroupManifest(fs: FileSystem, dir: Path,
-                                  g: GroupManifest): Unit = {
+                                  g: GroupManifest): Boolean = {
     val body = new StringBuilder()
       .append("{\"txns\":{")
       .append(g.txns.toSeq.sortBy(_._1).map { case (a, v) =>
@@ -6059,56 +6101,29 @@ object MergeWriter {
       } }
       futs.flatMap(Await.result(_, Duration.Inf)).toMap
     }
-    // OPTIMISTIC group commit with rebase-and-retry (writeEpochAndCommit's
-    // protocol lifted to group scope): losing the version CAS to a
-    // concurrent group writer is fine as long as the winner touched only
-    // OTHER members — our staged member states apply on top of its
-    // commit unchanged. A touched member whose pinned state moved means
-    // our stages were computed from stale survivors: fail loudly with the
-    // protocol's ConcurrentModificationException, never publish them.
-    var base = cur
-    var attempt = 0
-    while (true) {
-      try {
-        commitGroupManifest(fs, dir,
-          GroupManifest(base.map(_.version + 1).getOrElse(1L),
+    // OPTIMISTIC group commit (writeEpochAndCommit's protocol lifted to
+    // group scope): losing the version CAS to a concurrent group writer
+    // is fine as long as the winner touched only OTHER members — our
+    // staged member states apply on top of its commit unchanged. A
+    // touched member whose pinned state moved means our stages were
+    // computed from stale survivors: a loud conflict, never a publish.
+    // The winner may have BEEN this very batch (redelivered twice
+    // concurrently): its ledger entry makes ours a replay.
+    if (optimisticCommit("mergeGroup", groupLineage(fs, dir), cur,
+        staged.keys.toSeq.sorted) { base =>
+          if (txn.exists(t => base.exists(_.txns.get(t._1).exists(_ >= t._2))))
+            None
+          else Some(GroupManifest(0L,
             base.map(_.tables).getOrElse(Map.empty) ++ staged,
-            base.map(_.txns).getOrElse(Map.empty) ++ txn,
-            "mergeGroup", System.currentTimeMillis()))
-        gcGroup(fs, dir)
-        maybeAutoMaintainGroup(spark, fs, dir, groupPath, staged.keys.toSeq,
-          autoSplitBytesPerBucket, autoCompactEpochs)
-        if (drainEvery > 0 &&
-            txn.exists(t => (t._2 % drainEvery) == (drainEvery - 1)))
-          drainGroupPressure(spark, groupPath, drainOverlayBound,
-            drainEqdBound)
-        return
-      } catch {
-        case e: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          val newCur = currentGroupManifest(fs, dir).getOrElse(throw e)
-          // the winner may have BEEN this very batch (redelivered twice
-          // concurrently): its ledger entry makes ours a replay
-          if (txn.exists(t => newCur.txns.get(t._1).exists(_ >= t._2)))
-            return
-          // full member SIGNATURE, not epoch pointers alone: a write-
-          // only eq-delete commit appends overlays/eqds without moving
-          // any pointer, and an epochs-only compare would let a raced
-          // rebase clobber it
-          def memberSig(m: Option[Manifest]) =
-            m.map(x => (x.epochs, x.overlays, x.eqds))
-          val contested = staged.keys.filter(n =>
-            memberSig(newCur.tables.get(n)) !=
-              memberSig(cur.flatMap(_.tables.get(n)))).toSeq.sorted
-          if (contested.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"mergeGroup: concurrent writer rewrote contested members " +
-                s"${contested.mkString("{", ",", "}")} of $groupPath " +
-                s"(version ${newCur.version}) — re-run against the new " +
-                "group state")
-          base = Some(newCur)
-      }
+            base.map(_.txns).getOrElse(Map.empty) ++ txn))
+        }) {
+      gcGroup(fs, dir)
+      maybeAutoMaintainGroup(spark, fs, dir, groupPath, staged.keys.toSeq,
+        autoSplitBytesPerBucket, autoCompactEpochs)
+      if (drainEvery > 0 &&
+          txn.exists(t => (t._2 % drainEvery) == (drainEvery - 1)))
+        drainGroupPressure(spark, groupPath, drainOverlayBound,
+          drainEqdBound)
     }
   }
 
@@ -6211,15 +6226,12 @@ object MergeWriter {
 
   private def commitGroupOrConflict(fs: FileSystem, dir: Path,
                                     g: GroupManifest, op: String): Unit =
-    try commitGroupManifest(fs, dir,
-      g.copy(op = op, opTs = System.currentTimeMillis()))
-    catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$op: lost the version-${g.version} commit race to a " +
-            s"concurrent writer of $dir — re-run against the new group " +
-            "state", e)
-    }
+    if (!commitGroupManifest(fs, dir,
+        g.copy(op = op, opTs = System.currentTimeMillis())))
+      throw new java.util.ConcurrentModificationException(
+        s"$op: lost the version-${g.version} commit race to a " +
+          s"concurrent writer of $dir — re-run against the new group " +
+          "state")
 
   /** [[splitBuckets]] for one member of a group: double the member's
     * bucket modulus (same no-exchange `pmod` refinement) and commit the
@@ -6488,34 +6500,20 @@ object MergeWriter {
                         ms: Long = 0L): Unit = {
     val fs = fsFor(spark, groupPath)
     val dir = new Path(groupPath)
-    // the group twin of [[commitMetadata]] (a GroupManifest head, group
-    // commit and group gc): gc runs after the winning commit, never
-    // inside the lost-CAS retry
-    var attempt = 0
-    while (attempt <= 5) {
-      currentGroupManifest(fs, dir) match {
-        case None => throw new IllegalArgumentException(
-          s"setGroupRetention: no committed group manifest at $groupPath")
-        case Some(cur) =>
-          val v = math.max(KeepManifests, versions)
-          val m = math.max(0L, ms)
-          if (cur.tables.values.forall(t =>
-              t.retainVersions == v && t.retainMs == m)) return
-          val won =
-            try {
-              commitGroupManifest(fs, dir, GroupManifest(cur.version + 1,
-                cur.tables.map { case (n, t) =>
-                  n -> t.copy(retainVersions = v, retainMs = m) },
-                cur.txns, "retention", System.currentTimeMillis()))
-              true
-            } catch { case _: java.io.IOException => false }
-          if (won) { gcGroup(fs, dir); return }
-          attempt += 1
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"setGroupRetention: lost the commit race to concurrent writers " +
-        s"of $groupPath on every retry — re-run against the new state")
+    val v = math.max(KeepManifests, versions)
+    val m = math.max(0L, ms)
+    // reads no member state, so every lost race rebases; gc runs after
+    // the winning commit, never inside the retry
+    if (optimisticCommit("retention", groupLineage(fs, dir),
+        currentGroupManifest(fs, dir), Seq.empty[String]) {
+          case None => throw new IllegalArgumentException(
+            s"setGroupRetention: no committed group manifest at $groupPath")
+          case Some(cur) =>
+            if (cur.tables.values.forall(t =>
+                t.retainVersions == v && t.retainMs == m)) None
+            else Some(cur.copy(tables = cur.tables.map { case (n, t) =>
+              n -> t.copy(retainVersions = v, retainMs = m) }))
+        }) gcGroup(fs, dir)
   }
 
   /** Group-scope gc: keep the last `max(members' retainVersions,
@@ -6963,10 +6961,26 @@ object MergeWriter {
       if (epochIdSpec.nonEmpty && written.nonEmpty)
         identityExtremes(spark, s"$tablePath/$epoch", epochIdSpec)
       else Map.empty[String, Long]
-    val mine = written.toSet ++ dropBuckets
-    var base = prev
-    var attempt = 0
-    while (true) {
+    // a data conflict iff a bucket THIS write read-modified changed
+    // pointer or deletion-vector state since it was read, or the schema
+    // moved underneath it (on a CREATION race, "moved" means the winner
+    // created a table of a different schema than the one being written).
+    // A creation race where the winner chose a different modulus or
+    // recorded different merge keys is unrebasable: this write's rows
+    // were hashed with `buckets` from ITS key list (see
+    // [[Manifest.keyCols]]), so committing them would make every later
+    // pruned read miss rows silently. A concurrent ADD/DROP CONSTRAINT
+    // invalidates this write's enforcement pass, and a commit that moved
+    // the identity high-water may have assigned values overlapping this
+    // batch's reservation.
+    optimisticCommit(opName, tableLineage(fs, new Path(tablePath), ref),
+      prev, (written.toSet ++ dropBuckets).toSeq.sorted,
+      ReadFacts(Some(buckets),
+        Some(prev.fold(Option(cleanSchema.json))(_.schema)),
+        schemaIgnoresNullability = true, keys = Some(keys),
+        checks = Some(effChecks),
+        idhw = Option.when(epochIdSpec.nonEmpty)(
+          prev.map(_.idhw).getOrElse(Map.empty)))) { base =>
       // dropBuckets clears stale pointers for touched buckets the write
       // left EMPTY (a delete can empty a bucket; the partitioned write
       // emits no directory for it, so without the drop the old epoch —
@@ -7005,118 +7019,53 @@ object MergeWriter {
       val checked = base.forall(_.keysChecked) ||
         (base.map(_.epochs.keySet).getOrElse(Set.empty) -- dropBuckets --
           written).isEmpty
-      try {
-        refCommit(fs, new Path(tablePath), ref,
-          withRefreshedStats(
-          Manifest(base.map(_.version + 1).getOrElse(1L), buckets, epochs,
-            txns, Some(cleanSchema.json), keys, cluster, stats, bloom,
-            bloomSz, opName, System.currentTimeMillis(),
-            // retention + fingerprint policy ride every commit forward
-            base.map(_.retainVersions).getOrElse(KeepManifests),
-            base.map(_.retainMs).getOrElse(0L),
-            base.map(_.fingerprint).getOrElse(effFp),
-            keysChecked = checked,
-            // a rebase over a non-conflicting commit keeps the id space
-            // monotone (a schema-moving concurrent commit conflicts
-            // above, so ids can never collide)
-            colIds = colIds,
-            nextColId = math.max(nextColId,
-              base.map(_.nextColId).getOrElse(0L)),
-            // the deletion-vector policy rides every commit forward,
-            // like fingerprint; the param only seeds creation
-            deleteVectors = base.map(_.deleteVectors).getOrElse(dvSeed),
-            // ANALYZE statistics carry forward as estimates (Delta's
-            // behavior); statsVersion keeps naming the analyzed version
-            colStats = base.map(_.colStats).getOrElse(Map.empty),
-            statsVersion = base.map(_.statsVersion).getOrElse(0L),
-            statsRows = base.map(_.statsRows).getOrElse(0L),
-            // tags ride every commit forward; they name VERSIONS, so a
-            // new commit changes nothing about what they pin
-            tags = base.map(_.tags).getOrElse(Map.empty),
-            overlays = overlays,
-            // the fork version rides every branch commit (publish-time
-            // conflict check); -1 on main commits
-            branchBase = base.map(_.branchBase).getOrElse(-1L),
-            // constraints ride every commit forward; the rebase rule
-            // below conflicts when the set moved underneath this write
-            checks = effChecks,
-            colSketches = base.map(_.colSketches).getOrElse(Map.empty),
-            idhw = advanceIdhw(base.map(_.idhw).getOrElse(Map.empty),
-              epochIdSpec, idExt),
-            colHists = base.map(_.colHists).getOrElse(Map.empty),
-            eqds = eqds,
-            // the equality-delete policy rides every commit forward,
-            // like deleteVectors; the param only seeds creation
-            eqDeletes = base.map(_.eqDeletes).getOrElse(eqdSeed),
-            // shred declarations ride every commit forward (the epoch
-            // above was written WITH their hidden columns)
-            shredCols = effShred),
-          batchSk))
-        return
-      } catch {
-        case e: java.io.IOException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          val cur = refCurrent(fs, new Path(tablePath), ref).getOrElse(
-            throw e) // commit failed yet no manifest: surface the original
-          // data conflict iff any bucket THIS write read-modified changed
-          // pointer OR deletion-vector state since it was read, or the
-          // schema moved underneath us (on a CREATION race, "moved" means
-          // the winner created a table of a different schema than the one
-          // being written)
-          val conflicting = mine.exists(b =>
-            bucketSig(cur, b) != bucketSigOpt(prev, b))
-          // nullability-insensitive: the same logical schema serializes
-          // with different nullability by provenance (Seq-derived vs
-          // parquet-read frames)
-          def same(x: Option[String], y: Option[String]): Boolean =
-            (x, y) match {
-              case (Some(a), Some(b)) => a == b ||
-                org.apache.spark.sql.GraftColumnShim.sameTypeIgnoreNullability(
-                  DataType.fromJson(a), DataType.fromJson(b))
-              case (a, b) => a == b
-            }
-          val schemaConflict = prev match {
-            case Some(p) => !same(cur.schema, p.schema)
-            case None => !same(cur.schema, Some(cleanSchema.json))
-          }
-          // a creation race where the winner chose a different modulus is
-          // unrebasable: this write's rows were hashed with `buckets`, so
-          // its bucket ids are meaningless under the winner's layout even
-          // when they happen not to collide — committing them would make
-          // every later pruned read miss rows silently
-          val bucketConflict = cur.buckets != buckets
-          // a creation race where the winner recorded different merge
-          // keys is equally unrebasable: this write's bucket ids were
-          // hashed from ITS key list (see [[Manifest.keyCols]])
-          val keyConflict = cur.keyCols.nonEmpty && cur.keyCols != keys
-          // a concurrent ADD/DROP CONSTRAINT invalidates this write's
-          // enforcement pass (the batch was proven under the OLD set)
-          val checkConflict = cur.checks != effChecks
-          // a concurrent commit that moved the identity high-water may
-          // have assigned values overlapping this batch's reservation
-          val idConflict = epochIdSpec.nonEmpty &&
-            cur.idhw != prev.map(_.idhw).getOrElse(Map.empty)
-          if (conflicting || schemaConflict || bucketConflict ||
-              keyConflict || checkConflict || idConflict) {
-            val diff = mine.filter(b =>
-              bucketSig(cur, b) != bucketSigOpt(prev, b))
-            throw new java.util.ConcurrentModificationException(
-              s"merge: concurrent writer rewrote contested buckets " +
-                s"${diff.toSeq.sorted.mkString("{", ",", "}")} of " +
-                s"$tablePath (version ${cur.version}" +
-                s"${if (schemaConflict) ", schema changed" else ""}" +
-                s"${if (bucketConflict) s", bucket count ${cur.buckets} != $buckets"
-                   else ""}" +
-                s"${if (keyConflict) s", merge keys ${cur.keyCols.mkString("(", ",", ")")} != ${keys.mkString("(", ",", ")")}"
-                   else ""}" +
-                s"${if (checkConflict) ", CHECK constraints changed" else ""}" +
-                s"${if (idConflict) ", identity high-water moved" else ""}) — " +
-                "re-run against the new table state")
-          }
-          base = Some(cur)
-      }
+      Some(withRefreshedStats(
+        Manifest(base.map(_.version + 1).getOrElse(1L), buckets, epochs,
+          txns, Some(cleanSchema.json), keys, cluster, stats, bloom,
+          bloomSz, opName, System.currentTimeMillis(),
+          // retention + fingerprint policy ride every commit forward
+          base.map(_.retainVersions).getOrElse(KeepManifests),
+          base.map(_.retainMs).getOrElse(0L),
+          base.map(_.fingerprint).getOrElse(effFp),
+          keysChecked = checked,
+          // a rebase over a non-conflicting commit keeps the id space
+          // monotone (a schema-moving concurrent commit conflicts
+          // above, so ids can never collide)
+          colIds = colIds,
+          nextColId = math.max(nextColId,
+            base.map(_.nextColId).getOrElse(0L)),
+          // the deletion-vector policy rides every commit forward,
+          // like fingerprint; the param only seeds creation
+          deleteVectors = base.map(_.deleteVectors).getOrElse(dvSeed),
+          // ANALYZE statistics carry forward as estimates (Delta's
+          // behavior); statsVersion keeps naming the analyzed version
+          colStats = base.map(_.colStats).getOrElse(Map.empty),
+          statsVersion = base.map(_.statsVersion).getOrElse(0L),
+          statsRows = base.map(_.statsRows).getOrElse(0L),
+          // tags ride every commit forward; they name VERSIONS, so a
+          // new commit changes nothing about what they pin
+          tags = base.map(_.tags).getOrElse(Map.empty),
+          overlays = overlays,
+          // the fork version rides every branch commit (publish-time
+          // conflict check); -1 on main commits
+          branchBase = base.map(_.branchBase).getOrElse(-1L),
+          // constraints ride every commit forward; the rebase rule
+          // above conflicts when the set moved underneath this write
+          checks = effChecks,
+          colSketches = base.map(_.colSketches).getOrElse(Map.empty),
+          idhw = advanceIdhw(base.map(_.idhw).getOrElse(Map.empty),
+            epochIdSpec, idExt),
+          colHists = base.map(_.colHists).getOrElse(Map.empty),
+          eqds = eqds,
+          // the equality-delete policy rides every commit forward,
+          // like deleteVectors; the param only seeds creation
+          eqDeletes = base.map(_.eqDeletes).getOrElse(eqdSeed),
+          // shred declarations ride every commit forward (the epoch
+          // above was written WITH their hidden columns)
+          shredCols = effShred),
+        batchSk))
     }
+    ()
   }
 
   /** Keyed DELETE — `MERGE INTO target USING keys ON keys WHEN MATCHED

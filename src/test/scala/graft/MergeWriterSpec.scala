@@ -1268,31 +1268,41 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
   }
 
+  // loses the next `losses` puts (nothing committed), then delegates
+  private class Losing(var losses: Int) extends MergeWriter.CommitPrimitive {
+    var puts = 0
+    override def putIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
+                             target: org.apache.hadoop.fs.Path,
+                             stage: org.apache.hadoop.fs.Path,
+                             body: Array[Byte]): Boolean = {
+      puts += 1
+      if (losses > 0) { losses -= 1; false }
+      else MergeWriter.LinkOrRenameCommit.putIfAbsent(fs, target, stage, body)
+    }
+  }
+
+  // runs `race` (a concurrent writer winning the version) just before
+  // the first put, which then finds its target taken
+  private class Racing(race: () => Unit) extends MergeWriter.CommitPrimitive {
+    private var pending = true
+    override def putIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
+                             target: org.apache.hadoop.fs.Path,
+                             stage: org.apache.hadoop.fs.Path,
+                             body: Array[Byte]): Boolean = {
+      if (pending) { pending = false; race() }
+      MergeWriter.LinkOrRenameCommit.putIfAbsent(fs, target, stage, body)
+    }
+  }
+
+  /** Runs `body` with `p` installed as the commit primitive. */
+  private def withPrimitive[A](p: MergeWriter.CommitPrimitive)(body: => A): A =
+    try { MergeWriter.setCommitPrimitive(p); body }
+    finally MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
+
   test("metadata ops: a lost CAS re-reads the head and commits once; " +
       "a persistent loss conflicts and leaves the table unmoved") {
     import spark.implicits._
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
     import org.apache.spark.sql.types._
-    // loses the next `losses` puts (nothing committed), then delegates
-    class Losing(var losses: Int) extends MergeWriter.CommitPrimitive {
-      var puts = 0
-      override def putIfAbsent(fs: FileSystem, target: HPath, stage: HPath,
-                               body: Array[Byte]): Boolean = {
-        puts += 1
-        if (losses > 0) { losses -= 1; false }
-        else MergeWriter.LinkOrRenameCommit.putIfAbsent(fs, target, stage, body)
-      }
-    }
-    // runs `race` (a concurrent writer winning the version) just before
-    // the first put, which then finds its target taken
-    class Racing(race: () => Unit) extends MergeWriter.CommitPrimitive {
-      private var pending = true
-      override def putIfAbsent(fs: FileSystem, target: HPath, stage: HPath,
-                               body: Array[Byte]): Boolean = {
-        if (pending) { pending = false; race() }
-        MergeWriter.LinkOrRenameCommit.putIfAbsent(fs, target, stage, body)
-      }
-    }
     def newTable(): String = {
       val dir = Files.createTempDirectory("metaop").toString + "/t"
       MergeWriter.merge(spark, dir,
@@ -1428,6 +1438,177 @@ class MergeWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       MergeWriter.setCommitPrimitive(MergeWriter.LinkOrRenameCommit)
       FaultyLocalFileSystem.disarm()
     }
+  }
+
+  // The five data writers, each against a fresh 4-bucket target holding
+  // ids 0..15 with v = id: a copy-on-write merge ("cow"), a merge-on-read
+  // upsert ("mor"), a deletion-vector delete ("dv"), an equality-delete
+  // upsert ("eqd") and a group member merge ("group", members m and
+  // other). Each entry is (kind, the op history records).
+  private val dataWriters = Seq("cow" -> "merge", "mor" -> "merge",
+    "dv" -> "delete", "eqd" -> "merge", "group" -> "mergeGroup")
+
+  private def seedTarget(kind: String): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory(s"writer-$kind").toString + "/t"
+    val rows = (0L until 16L).map(i => (i, i.toInt, "seed"))
+      .toDF("id", "v", "s")
+    if (kind == "group")
+      MergeWriter.mergeGroup(spark, dir, Seq(("m", rows, Seq("id")),
+        ("other", rows, Seq("id"))), buckets = 4)
+    else MergeWriter.merge(spark, dir, rows, Seq("id"), buckets = 4,
+      deleteVectors = kind == "mor" || kind == "dv", eqDeletes = kind == "eqd")
+    dir
+  }
+
+  // the writer under test: upserts (id, 7, "w"), or deletes id for "dv"
+  private def write(kind: String, path: String, id: Long): Unit = {
+    import spark.implicits._
+    val row = Seq((id, 7, "w")).toDF("id", "v", "s")
+    kind match {
+      case "dv" =>
+        MergeWriter.delete(spark, path, Seq(id).toDF("id"), Seq("id"))
+      case "group" =>
+        MergeWriter.mergeGroup(spark, path, Seq(("m", row, Seq("id"))))
+      case _ => MergeWriter.merge(spark, path, row, Seq("id"))
+    }
+  }
+
+  // a concurrent writer inserting (id, 100, "r") into `member` (tables: the
+  // table itself)
+  private def race(kind: String, path: String, id: Long,
+                   member: String): Unit = {
+    import spark.implicits._
+    val row = Seq((id, 100, "r")).toDF("id", "v", "s")
+    if (kind == "group")
+      MergeWriter.mergeGroup(spark, path, Seq((member, row, Seq("id"))))
+    else MergeWriter.merge(spark, path, row, Seq("id"))
+  }
+
+  private def rowsOf(kind: String, path: String,
+                     member: String = "m"): Map[Long, String] =
+    (if (kind == "group") MergeWriter.readGroupTable(spark, path, member)
+     else MergeWriter.readTable(spark, path))
+      .select("id", "s").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  private def history(kind: String, path: String): Seq[(Long, String)] =
+    (if (kind == "group") MergeWriter.groupHistory(spark, path)
+     else MergeWriter.tableHistory(spark, path))
+      .select("version", "op").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq.sortBy(_._1)
+
+  private def bucketOf(id: Long): Int = {
+    import spark.implicits._
+    Seq(id).toDF("id").select(pmod(hash(col("id")), lit(4))).head().getInt(0)
+  }
+
+  test("data writers: a failed stage cleanup after a won put is no lost race") {
+    FaultyLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    try Seq("cow" -> "merge", "dv" -> "delete", "group" -> "mergeGroup")
+      .foreach { case (kind, op) =>
+        val local = seedTarget(kind)
+        val v0 = history(kind, local).last._1
+        FaultyLocalFileSystem.failNextDelete(
+          _.getName.startsWith(".tmp-manifest-"))
+        write(kind, "faulty://" + local, 3L)
+        FaultyLocalFileSystem.disarm()
+        assert(history(kind, local).filter(_._1 > v0) == Seq(v0 + 1 -> op),
+          kind)
+        val rows = rowsOf(kind, local)
+        if (kind == "dv") assert(!rows.contains(3L) && rows.size == 15, kind)
+        else assert(rows(3L) == "w" && rows.size == 16, kind)
+      }
+    finally FaultyLocalFileSystem.disarm()
+  }
+
+  test("data writers: an always-lost put conflicts after 6 attempts and " +
+      "leaves the target unmoved") {
+    dataWriters.foreach { case (kind, op) =>
+      val dir = seedTarget(kind)
+      val before = history(kind, dir)
+      val rows0 = rowsOf(kind, dir)
+      val epochRoot = new java.io.File(if (kind == "group") s"$dir/m" else dir)
+      def epochs() = epochRoot.listFiles().map(_.getName)
+        .filter(_.startsWith("e-")).toSet
+      val e0 = epochs()
+      val always = new Losing(Int.MaxValue)
+      val e = intercept[java.util.ConcurrentModificationException](
+        withPrimitive(always)(write(kind, dir, 3L)))
+      assert(e.getMessage.startsWith(s"$op:") &&
+        e.getMessage.contains("on every retry"), s"$kind: ${e.getMessage}")
+      assert(always.puts == 6, s"$kind: ${always.puts} puts")
+      assert(history(kind, dir) == before, kind)
+      assert(rowsOf(kind, dir) == rows0, kind)
+      // the staged epoch stays on disk for gc, unreferenced by any read
+      val staged = epochs() -- e0
+      if (kind != "dv") assert(staged.nonEmpty, s"$kind staged nothing")
+      val files =
+        (if (kind == "group") MergeWriter.readGroupTable(spark, dir, "m")
+         else MergeWriter.readTable(spark, dir)).inputFiles
+      assert(!files.exists(f => staged.exists(s => f.contains(s"/$s/"))), kind)
+    }
+  }
+
+  test("data writers: a racer on a disjoint bucket or member rebases; " +
+      "on a touched one the write conflicts naming it") {
+    val b3 = bucketOf(3L)
+    val fresh = (16L until 64L).map(i => i -> bucketOf(i))
+    val sameBucket = fresh.find(_._2 == b3).get._1
+    val otherBucket = fresh.find(_._2 != b3).get._1
+    dataWriters.foreach { case (kind, op) =>
+      // disjoint: the racer commits first, the write rebases onto it
+      val dir = seedTarget(kind)
+      val v0 = history(kind, dir).last._1
+      val racerOp = if (kind == "group") "mergeGroup" else "merge"
+      withPrimitive(new Racing(() =>
+        race(kind, dir, otherBucket, member = "other")))(write(kind, dir, 3L))
+      assert(history(kind, dir).filter(_._1 > v0) ==
+        Seq(v0 + 1 -> racerOp, v0 + 2 -> op), kind)
+      val racerRows = rowsOf(kind, dir, "other")
+      assert(racerRows(otherBucket) == "r", kind)
+      val rows = rowsOf(kind, dir)
+      if (kind == "dv") assert(!rows.contains(3L), kind)
+      else assert(rows(3L) == "w", kind)
+      // contested: the racer rewrote what the write read
+      val dir2 = seedTarget(kind)
+      val w0 = history(kind, dir2).last._1
+      val e = intercept[java.util.ConcurrentModificationException](
+        withPrimitive(new Racing(() =>
+          race(kind, dir2, sameBucket, member = "m")))(write(kind, dir2, 3L)))
+      val reason = if (kind == "group") "members {m}" else s"buckets {$b3}"
+      assert(e.getMessage.startsWith(s"$op:") &&
+        e.getMessage.contains(reason), s"$kind: ${e.getMessage}")
+      assert(history(kind, dir2).filter(_._1 > w0) == Seq(w0 + 1 -> racerOp),
+        kind)
+      val after = rowsOf(kind, dir2)
+      assert(after(sameBucket) == "r" && after(3L) == "seed", kind)
+    }
+  }
+
+  test("a create fault staging the manifest surfaces as itself after " +
+      "one attempt; nothing commits and a re-run succeeds") {
+    FaultyLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    try Seq("cow" -> "merge", "group" -> "mergeGroup").foreach {
+      case (kind, op) =>
+        val local = seedTarget(kind)
+        val v0 = history(kind, local).last._1
+        val counting = new Losing(0)
+        FaultyLocalFileSystem.failNextCreate(
+          _.getName.startsWith(".tmp-manifest-"))
+        val e = intercept[java.io.IOException](
+          withPrimitive(counting)(write(kind, "faulty://" + local, 3L)))
+        FaultyLocalFileSystem.disarm()
+        assert(e.getMessage.startsWith("injected fault"), s"$kind: $e")
+        assert(counting.puts == 0, s"$kind: ${counting.puts} puts")
+        assert(history(kind, local).last._1 == v0, kind)
+        assert(rowsOf(kind, local)(3L) == "seed", kind)
+        write(kind, "faulty://" + local, 3L)
+        assert(history(kind, local).filter(_._1 > v0) == Seq(v0 + 1 -> op),
+          kind)
+        assert(rowsOf(kind, local)(3L) == "w", kind)
+    }
+    finally FaultyLocalFileSystem.disarm()
   }
 
   test("retention: a raised version window survives gc; age window too") {
